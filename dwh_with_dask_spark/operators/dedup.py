@@ -7,7 +7,8 @@ builtins, so everything stays JVM-side and codegen'd.
 
 Scale notes (100 TB): exact dedup is one hash-shuffle on a 64-char key
 (not the full text). The pairwise operators all avoid the O(n^2) cross
-join: Jaccard goes through an inverted shingle index (the self-join blows
+join: ``shingle_pairs`` (exact Jaccard / containment) goes through an
+inverted shingle index (the self-join blows
 up only on shingles shared by many docs — cap with ``max_shingle_freq``);
 MinHash-LSH buckets by band signature so only same-bucket candidates are
 joined; SimHash bands its bit-prefixes the same way.
@@ -15,12 +16,17 @@ joined; SimHash bands its bit-prefixes the same way.
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from dwh_with_dask_spark.operators.caching import CacheScope, attach, scoped
 from dwh_with_dask_spark.operators.partitioning import barrier, widen
+
+#: auto-dispatch decisions, with the measured quantities behind them
+_log = logging.getLogger(__name__)
 
 
 def normalize_text(col: Column | str) -> Column:
@@ -225,7 +231,7 @@ def tfidf_cosine_pairs(
 ) -> DataFrame:
     """TF-IDF-weighted cosine similarity for all document pairs above
     ``threshold`` — the weighted companion to the set-based
-    ``ngram_jaccard_pairs``: shared RARE tokens dominate the score,
+    ``shingle_pairs(kind="jaccard")``: shared RARE tokens dominate the score,
     boilerplate contributes ~nothing, so it finds topical/near-dup
     pairs that unigram Jaccard dilutes.
 
@@ -332,14 +338,12 @@ def tfidf_cosine_pairs(
     )
     # persisted: consumed by both final size joins (and, on the blocked
     # path, by the vector build) — round 15, same duplicated-subtree
-    # note as ngram_jaccard_pairs' sizes.
+    # note as shingle_pairs' sizes.
     norms = scope.persist(
         w.groupBy("id").agg(F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("nrm"))
     )
 
     if strategy == "auto":
-        import logging
-
         probe = (
             w.groupBy("tok")
             .agg(F.count(F.lit(1)).alias("__df"))
@@ -360,7 +364,7 @@ def tfidf_cosine_pairs(
         strategy = (
             "blocked" if (vol > n_eff * n_eff and blocked_ok) else "index"
         )
-        logging.getLogger("dwh_with_dask_spark.dedup").info(
+        _log.info(
             "tfidf_cosine_pairs auto: sum(df^2)=%d vs n_eff^2=%d, "
             "dense_bytes=%.0f (budget %d), id_integral=%s -> %s",
             vol,
@@ -512,51 +516,143 @@ def _tfidf_blocked_dots(
     return dots
 
 
-def ngram_jaccard_pairs(
+def shingle_pairs(
     df: DataFrame,
+    kind: str,
+    strategy: str,
+    *,
+    threshold: float,
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 3,
-    threshold: float = 0.1,
     max_shingle_freq: int | None = None,
+    naive_budget: int = 1_000_000_000,
     scope: CacheScope | None = None,
+    decision_out: dict | None = None,
 ) -> DataFrame:
-    """Exact n-gram Jaccard similarity for all pairs above ``threshold``.
+    """Exact word-``n``-gram shingle pairs scoring >= ``threshold``.
 
-    Inverted-index plan: explode distinct shingles, self-join on the
-    shingle (id_a < id_b), count common shingles per pair, then
-    ``J = common / (|A| + |B| - common)``. All integer arithmetic until
-    the final division, so the result is bit-deterministic.
+    ``kind`` picks the metric over the distinct shingle sets:
 
-    ``max_shingle_freq`` drops shingles occurring in more than that many
-    docs before the self-join — the standard guard against the quadratic
-    blowup on boilerplate shingles at corpus scale (slightly lowers J for
-    affected pairs; leave None for exact semantics).
+    - ``"jaccard"`` — ``J = |A∩B| / (|A| + |B| - |A∩B|)``, one row per
+      unordered pair (``id_a < id_b``), score column ``jaccard``.
+    - ``"containment"`` — the ORDERED ``C(A→B) = |A∩B| / |A|`` with
+      ``id_a`` the CONTAINED doc and ``id_b`` the container. A short doc
+      quoted wholesale inside a long one has C ~1.0 but J ~|A|/|B|, so
+      symmetric dedup never sees it (quote/subset detection; the
+      contained doc is the one to drop). Near-identical docs pass in
+      both directions (two rows). Score column ``containment``.
+
+    Output: ``id_a, id_b, n_common, n_a, n_b, <kind>``. Integer
+    arithmetic up to one final division, so results are
+    bit-deterministic and identical across strategies.
+
+    ``strategy`` picks the candidate plan; the exact strategies return
+    the same rows:
+
+    - ``"naive"`` — the inverted index: self-join the shingle table on
+      the shingle (``id_lo < id_hi``) and count common shingles per
+      unordered pair in one map-side-combined groupBy. Containment
+      emits both directions from that one row with a codegen'd
+      2-element explode (no second self-join). Cost ``sum(df(s)²)``
+      joined rows — quadratic in the hottest shingle's document
+      frequency. ``max_shingle_freq`` (naive only) drops shingles in
+      more than that many docs before the self-join: the standard
+      boilerplate guard, which slightly lowers the score of affected
+      pairs (sizes stay uncapped); None = exact.
+    - ``"prefix"`` — AllPairs/PPJoin prefix filtering (Chaudhuri,
+      Bayardo; Xiao et al. 2008), exact: order each doc's shingles by
+      global rarity (ascending df, shingle as tie-break) and index only
+      its ``|A| - ceil(t·|A|) + 1`` rarest — a pair scoring >= t must
+      share one of them under any common total order. Jaccard filters
+      both sides (plus the length filter t·|A| <= |B| <= |A|/t);
+      containment filters only the contained side and joins it against
+      the container's full ranked table. The positional bound (a common
+      shingle at ranks ra, rb bounds the overlap by
+      ``1 + min(|A|-ra, |B|-rb)``) prunes further; a valid pair's FIRST
+      common shingle always passes it. Candidates are verified exactly
+      with one ``array_intersect`` per pair. Hot boilerplate lands in
+      every suffix and never enters the index, so the df² term
+      vanishes; but verification costs candidates × doc shingles, so
+      prefix wins only when candidates are scarce. MEASURED: natural
+      heavy-tailed df (.localdata/skewnl, Zipf(1.1) 50k-word vocab,
+      50% boilerplate header, t=0.8) prefix 6.0 s vs naive 315.7 s,
+      identical pairs; near-uniform iid-Zipf synthetic corpora invert
+      it (sf1 Jaccard naive 22 s vs prefix 189 s; 50k-doc skew
+      containment 48.5 s vs 317.7 s).
+    - ``"auto"`` — probe the shingle df histogram in one aggregate
+      (``shingle_df_stats``) and dispatch per ``choose_pair_strategy``:
+      prefix on heavy tails, naive within ``naive_budget``, else naive
+      with the largest frequency cap that fits. The choice is logged
+      and, when ``decision_out`` (a dict) is passed, recorded there as
+      ``{strategy, cap, reason, stats}``. The probe is one eager Spark
+      job at plan-construction time.
+
+    The ceil() guards subtract 1e-9 so float noise can only lengthen a
+    prefix or admit an extra candidate, never drop a qualifying pair.
+    Persists go to ``scope`` (see operators.caching).
     """
-    # Persisted: the shingle table feeds doc sizes, (when capped) the
-    # hot-set aggregate, and BOTH sides of the self-join — without
-    # materialization each consumer re-derives scan→normalize→explode→
-    # distinct (measured 6 scans in the capped plan). One (id, shingle)
-    # row per distinct shingle occurrence is exactly the inverted index
-    # production systems store. Lifecycle: caller-owned via ``scope``
-    # (see operators.caching) — release after the final action.
+    if kind not in ("jaccard", "containment"):
+        raise ValueError(f"unknown kind {kind!r}")
+    if strategy not in ("naive", "prefix", "auto"):
+        raise ValueError(f"unknown strategy {strategy!r}")
+    if max_shingle_freq is not None and strategy != "naive":
+        raise ValueError(
+            f"max_shingle_freq requires strategy='naive', got {strategy!r}"
+        )
     scope, created = scoped(scope)
+    if strategy == "auto":
+        stats = shingle_df_stats(df, id_col, text_col, n, scope=scope)
+        choice = choose_pair_strategy(stats, naive_budget)
+        _log.info(
+            "shingle_pairs(%s) auto: strategy=%s (%s)",
+            kind,
+            choice["strategy"],
+            choice["reason"],
+        )
+        if decision_out is not None:
+            decision_out.update(stats=stats, **choice)
+        strategy = "prefix" if choice["strategy"] == "prefix" else "naive"
+        max_shingle_freq = choice["cap"]
+    # Persisted: the shingle table feeds the sizes, the hot set or the
+    # rarity rank, and both join sides — without materialization each
+    # consumer re-derives scan→tokenize→explode→distinct (measured 6
+    # scans in the capped plan). sizes too (round 15): it is consumed
+    # under two aliases, which makes the subtrees canonically different,
+    # so each alias re-ran a pass + shuffle over the cached shingles
+    # (plans/r15/dedup_ngram_jaccard_capped_before.txt). Measured at
+    # sf0.1 (median of 5, rows asserted identical): uncapped Jaccard
+    # 0.941 s → 0.744 s, capped 1.810 s → 1.680 s.
     sh = scope.persist(_doc_shingles(df, id_col, text_col, n))
-    # sizes/hot are persisted too (round 15): each is consumed by BOTH
-    # join sides, and alias renaming above the aggregate makes the two
-    # subtrees canonically different, so without materialization each
-    # consumer re-runs a full pass + shuffle over the cached shingle
-    # table (the before plan shows the sizes aggregate twice, Exchanges
-    # 46/55, and the hot aggregate twice, Exchanges 15/29 —
-    # plans/r15/dedup_ngram_jaccard_capped_before.txt). Both frames are
-    # small by construction: sizes is one 16-byte row per document, hot
-    # is the boilerplate tail. Measured at sf0.1 (median of 5,
-    # scripts/exp_r15_jaccard_dup.py): uncapped 0.941 s → 0.744 s,
-    # capped 1.810 s → 1.680 s, rows asserted identical first.
     sizes = scope.persist(
         sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
     )
+    if strategy == "naive":
+        pairs = _naive_pair_counts(sh, sizes, kind, max_shingle_freq, scope)
+    else:
+        pairs = _prefix_pair_counts(sh, sizes, kind, threshold, scope)
+    c = F.col("n_common").cast("double")
+    if kind == "jaccard":
+        score = c / (F.col("n_a") + F.col("n_b") - F.col("n_common")).cast("double")
+    else:
+        score = c / F.col("n_a").cast("double")
+    out = (
+        pairs.withColumn(kind, score)
+        .filter(F.col(kind) >= F.lit(threshold))
+        .select("id_a", "id_b", "n_common", "n_a", "n_b", kind)
+    )
+    return attach(out, scope, created)
 
+
+def _naive_pair_counts(
+    sh: DataFrame,
+    sizes: DataFrame,
+    kind: str,
+    max_shingle_freq: int | None,
+    scope: CacheScope,
+) -> DataFrame:
+    """(id_a, id_b, n_common, n_a, n_b) from the inverted-index
+    self-join — ``shingle_pairs``' naive strategy."""
     joinable = sh
     if max_shingle_freq is not None:
         # The HOT set (df > cap) is small by construction — it is exactly
@@ -571,372 +667,99 @@ def ngram_jaccard_pairs(
             .select("shingle")
         )
         joinable = sh.join(F.broadcast(hot), "shingle", "left_anti")
-
-    a = joinable.select(F.col("id").alias("id_a"), "shingle")
-    b = joinable.select(F.col("id").alias("id_b"), "shingle")
+    # the unordered pair is (lo, hi); containment orients it below
+    lo, hi = ("a", "b") if kind == "jaccard" else ("lo", "hi")
+    a = joinable.select(F.col("id").alias(f"id_{lo}"), "shingle")
+    b = joinable.select(F.col("id").alias(f"id_{hi}"), "shingle")
     common = (
         a.join(b, "shingle")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
+        .filter(F.col(f"id_{lo}") < F.col(f"id_{hi}"))
+        .groupBy(f"id_{lo}", f"id_{hi}")
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
-    sa = sizes.select(F.col("id").alias("id_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col("id").alias("id_b"), F.col("n_sh").alias("n_b"))
-    out = (
-        common.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("n_common").cast("double")
-            / (F.col("n_a") + F.col("n_b") - F.col("n_common")).cast("double"),
+    slo = sizes.select(F.col("id").alias(f"id_{lo}"), F.col("n_sh").alias(f"n_{lo}"))
+    shi = sizes.select(F.col("id").alias(f"id_{hi}"), F.col("n_sh").alias(f"n_{hi}"))
+    sized = common.join(slo, f"id_{lo}").join(shi, f"id_{hi}")
+    if kind == "jaccard":
+        return sized
+
+    def direction(x: str, y: str) -> Column:
+        return F.struct(
+            F.col(f"id_{x}").alias("id_a"),
+            F.col(f"id_{y}").alias("id_b"),
+            F.col("n_common"),
+            F.col(f"n_{x}").alias("n_a"),
+            F.col(f"n_{y}").alias("n_b"),
         )
-        .filter(F.col("jaccard") >= F.lit(threshold))
-        .select("id_a", "id_b", "n_common", "n_a", "n_b", "jaccard")
-    )
-    return attach(out, scope, created)
+
+    return sized.select(
+        F.explode(F.array(direction(lo, hi), direction(hi, lo))).alias("p")
+    ).select("p.*")
 
 
-def ngram_jaccard_pairs_prefix(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.1,
-    scope: CacheScope | None = None,
+def _prefix_pair_counts(
+    sh: DataFrame,
+    sizes: DataFrame,
+    kind: str,
+    threshold: float,
+    scope: CacheScope,
 ) -> DataFrame:
-    """Exact n-gram Jaccard pairs >= ``threshold`` via prefix filtering
-    (AllPairs-style) — same output as ``ngram_jaccard_pairs`` with
-    ``max_shingle_freq=None``, at a fraction of the join volume.
-
-    The naive inverted-index self-join costs sum(df(s)^2) over shingles
-    s — quadratic in the hottest shingle's document frequency, which is
-    what boilerplate text blows up. Prefix filtering prunes EXACTLY
-    (no semantic change, unlike the frequency cap):
-
-    1. order every document's shingles by global rarity (ascending
-       document frequency, shingle as tie-break);
-    2. index only each doc's PREFIX — its ``|A| - ceil(t*|A|) + 1``
-       rarest shingles. Theorem (Chaudhuri/Bayardo): two sets with
-       Jaccard >= t must share at least one prefix shingle under any
-       common total order — rarity order makes the surviving collision
-       lists the SHORTEST ones. Hot boilerplate shingles land in every
-       doc's suffix and never enter the index at all, removing the df^2
-       term the frequency cap only approximates away.
-    3. candidate pairs = prefix-index self-join + the length filter
-       (t*|A| <= |B| <= |A|/t, necessary for J >= t);
-    4. verify candidates EXACTLY: join the candidate pairs back to the
-       full shingle table on both sides and count the true
-       intersection, then apply the Jaccard threshold.
-
-    Cost shape: the verification join is proportional to candidates x
-    avg doc shingles, so the method wins exactly when the prefix index
-    makes candidates scarce — heavy-tailed shingle document frequencies
-    (natural-language corpora, where boilerplate is hot and content
-    shingles are near-unique) and high thresholds. MEASURED regime
-    boundary on the driver's synthetic corpus (tiny vocab, iid Zipf
-    words, 50k docs at local sf1): shingle df is near-uniform (~22
-    mean), nearly every doc pair shares a "rare" shingle, and
-    verification volume exceeds the naive plan's collision counting —
-    naive 22 s at any threshold vs prefix 189 s even at t=0.7. On that
-    distribution use ``ngram_jaccard_pairs`` (collision counting is one
-    map-side-combined groupBy, no distinct, no verify join) or the
-    frequency cap / MinHash-LSH scale paths. Prefix filtering is the
-    exact-answer tool for the boilerplate-skewed distributions the cap
-    would otherwise have to approximate on.
-
-    The ceil() guards subtract 1e-9 before rounding so float noise can
-    only lengthen a prefix or admit an extra candidate (both safe for
-    exactness), never drop a qualifying pair.
-    """
-    from pyspark.sql.window import Window
-
-    scope, created = scoped(scope)
-    sh = scope.persist(_doc_shingles(df, id_col, text_col, n))
-    # persisted: consumed by the rank join AND both final size joins
-    # (round 15, same duplicated-subtree note as ngram_jaccard_pairs)
-    sizes = scope.persist(
-        sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
-    )
-
+    """(id_a, id_b, n_common, n_a, n_b) for the prefix-filtered,
+    exactly verified candidates — ``shingle_pairs``' prefix strategy."""
     freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("__df"))
-    w = Window.partitionBy("id").orderBy(F.col("__df").asc(), F.col("shingle").asc())
+    w = Window.partitionBy("id").orderBy(
+        F.col("__df").asc(), F.col("shingle").asc()
+    )
     ranked = (
         sh.join(freq, "shingle")
         .withColumn("__rk", F.row_number().over(w))
         .join(sizes, "id")
     )
-    prefix_len = (
+    in_prefix = F.col("__rk") <= (
         F.col("n_sh")
         - F.ceil(F.col("n_sh") * F.lit(threshold) - F.lit(1e-9))
         + F.lit(1)
     )
-    prefix = scope.persist(
-        ranked.filter(F.col("__rk") <= prefix_len).select(
-            "id", "shingle", "n_sh", "__rk"
-        )
-    )
-
-    pa = prefix.select(
+    cols = ("id", "shingle", "n_sh", "__rk")
+    if kind == "jaccard":
+        # both sides prefix-filtered: only the prefix is persisted
+        side_a = side_b = scope.persist(ranked.filter(in_prefix).select(*cols))
+    else:
+        # containment probes the contained side's prefix against the
+        # container's FULL ranked table (the asymmetric prefix theorem),
+        # so ranked itself is shared and persisted
+        side_b = scope.persist(ranked.select(*cols))
+        side_a = side_b.filter(in_prefix)
+    pa = side_a.select(
         F.col("id").alias("id_a"), "shingle",
         F.col("n_sh").alias("n_a"), F.col("__rk").alias("__rka"),
     )
-    pb = prefix.select(
+    pb = side_b.select(
         F.col("id").alias("id_b"), "shingle",
         F.col("n_sh").alias("n_b"), F.col("__rk").alias("__rkb"),
     )
-    # PPJoin POSITIONAL filter (round 16, Xiao et al. 2008): a common
-    # shingle at ranks (ra, rb) bounds the true overlap by
-    # 1 + min(|A|-ra, |B|-rb); J >= t forces overlap >=
-    # ceil(t·(|A|+|B|)/(1+t)). Exact: a valid pair's FIRST common
-    # shingle always satisfies the bound (nothing precedes it on
-    # either side), so the pair survives via that match; the -1e-9
-    # slack can only ADMIT extra candidates, and the exact Jaccard
-    # threshold is re-applied after verification.
-    alpha = F.ceil(
-        (F.col("n_a") + F.col("n_b")).cast("double")
-        * F.lit(threshold / (1.0 + threshold))
-        - F.lit(1e-9)
-    )
-    cand = (
-        pa.join(pb, "shingle")
-        .filter(
+    # PPJoin positional filter: alpha is the overlap a score >= t
+    # forces, and a common shingle at ranks (ra, rb) bounds the overlap
+    # by 1 + min(|A|-ra, |B|-rb)
+    if kind == "jaccard":
+        pair_ok = (
             (F.col("id_a") < F.col("id_b"))
             # length filter: J >= t forces t <= |B|/|A| <= 1/t
             & (F.col("n_b") >= F.col("n_a") * F.lit(threshold) - F.lit(1e-9))
             & (F.col("n_a") >= F.col("n_b") * F.lit(threshold) - F.lit(1e-9))
-            & (
-                F.lit(1)
-                + F.least(
-                    F.col("n_a") - F.col("__rka"),
-                    F.col("n_b") - F.col("__rkb"),
-                )
-                >= alpha
-            )
         )
-        .select("id_a", "id_b")
-        .distinct()
-    )
-
-    # Exact verification via per-doc shingle ARRAYS (round 16): the
-    # old formulation joined candidates back to the exploded shingle
-    # table on BOTH sides — |cand| × avg-doc-shingles rows shuffled
-    # into the common-count aggregate (the measured 8-10 s stage at
-    # sf0.1). Two joins against a doc-count-sized array table move
-    # |cand| rows instead, and the intersection count is one JVM
-    # array_intersect per pair. Counts are identical: the shingle
-    # table is distinct-per-doc and array_intersect de-duplicates.
-    # n_a/n_b come free as array sizes (same values the sizes
-    # aggregate produced; cast long to keep the schema).
-    arrs = scope.persist(
-        sh.groupBy("id").agg(F.collect_list("shingle").alias("__shs"))
-    )
-    aa = arrs.select(F.col("id").alias("id_a"), F.col("__shs").alias("__sa"))
-    ab = arrs.select(F.col("id").alias("id_b"), F.col("__shs").alias("__sb"))
-    out = (
-        cand.join(aa, "id_a")
-        .join(ab, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.size(F.array_intersect("__sa", "__sb"))
-            .cast("long")
-            .alias("n_common"),
-            F.size("__sa").cast("long").alias("n_a"),
-            F.size("__sb").cast("long").alias("n_b"),
+        alpha = F.ceil(
+            (F.col("n_a") + F.col("n_b")).cast("double")
+            * F.lit(threshold / (1.0 + threshold))
+            - F.lit(1e-9)
         )
-        .withColumn(
-            "jaccard",
-            F.col("n_common").cast("double")
-            / (F.col("n_a") + F.col("n_b") - F.col("n_common")).cast("double"),
-        )
-        .filter(F.col("jaccard") >= F.lit(threshold))
-        .select("id_a", "id_b", "n_common", "n_a", "n_b", "jaccard")
-    )
-    return attach(out, scope, created)
-
-
-def containment_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.8,
-    max_shingle_freq: int | None = None,
-    scope: CacheScope | None = None,
-) -> DataFrame:
-    """Exact ORDERED containment pairs: C(A→B) = |sh(A) ∩ sh(B)| / |sh(A)|
-    >= ``threshold``, emitted as (id_a = the CONTAINED doc, id_b = the
-    container). The asymmetric companion to ``ngram_jaccard_pairs``: a
-    short document quoted wholesale inside a much longer one has
-    containment ~1.0 but Jaccard ~|A|/|B| — arbitrarily small — so
-    symmetric-threshold dedup never sees it. Quote/subset detection is
-    the standard reason curation pipelines run containment alongside
-    Jaccard (the contained doc is the one to drop).
-
-    Same inverted-index plan and cost shape as Jaccard: the expensive
-    symmetric common-shingle count is computed ONCE per unordered pair
-    (id_lo < id_hi), then both directions are emitted from that row by
-    a codegen'd 2-element explode — no second self-join, no union
-    re-running the join subtree. Near-identical docs legitimately pass
-    in both directions (two output rows). All integer arithmetic until
-    the final division, so the result is bit-deterministic.
-
-    ``max_shingle_freq``: same boilerplate guard as
-    ``ngram_jaccard_pairs`` (broadcast anti-join of the hot set);
-    None = exact semantics.
-    """
-    scope, created = scoped(scope)
-    sh = scope.persist(_doc_shingles(df, id_col, text_col, n))
-    # sizes/hot persisted for the same duplicated-subtree reason as
-    # ngram_jaccard_pairs (round 15; see the measurement note there) —
-    # both are consumed twice under different aliases.
-    sizes = scope.persist(
-        sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
-    )
-
-    joinable = sh
-    if max_shingle_freq is not None:
-        hot = scope.persist(
-            sh.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") > max_shingle_freq)
-            .select("shingle")
-        )
-        joinable = sh.join(F.broadcast(hot), "shingle", "left_anti")
-
-    a = joinable.select(F.col("id").alias("id_lo"), "shingle")
-    b = joinable.select(F.col("id").alias("id_hi"), "shingle")
-    common = (
-        a.join(b, "shingle")
-        .filter(F.col("id_lo") < F.col("id_hi"))
-        .groupBy("id_lo", "id_hi")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    slo = sizes.select(F.col("id").alias("id_lo"), F.col("n_sh").alias("n_lo"))
-    shi = sizes.select(F.col("id").alias("id_hi"), F.col("n_sh").alias("n_hi"))
-    sized = common.join(slo, "id_lo").join(shi, "id_hi")
-    dirs = sized.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("id_lo").alias("id_a"),
-                    F.col("id_hi").alias("id_b"),
-                    F.col("n_common"),
-                    F.col("n_lo").alias("n_a"),
-                    F.col("n_hi").alias("n_b"),
-                ),
-                F.struct(
-                    F.col("id_hi").alias("id_a"),
-                    F.col("id_lo").alias("id_b"),
-                    F.col("n_common"),
-                    F.col("n_hi").alias("n_a"),
-                    F.col("n_lo").alias("n_b"),
-                ),
-            )
-        ).alias("p")
-    ).select("p.*")
-    out = (
-        dirs.withColumn(
-            "containment",
-            F.col("n_common").cast("double") / F.col("n_a").cast("double"),
-        )
-        .filter(F.col("containment") >= F.lit(threshold))
-        .select("id_a", "id_b", "n_common", "n_a", "n_b", "containment")
-    )
-    return attach(out, scope, created)
-
-
-def containment_pairs_prefix(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.8,
-    scope: CacheScope | None = None,
-) -> DataFrame:
-    """EXACT containment pairs >= ``threshold`` via prefix filtering —
-    same output as ``containment_pairs(max_shingle_freq=None)`` at a
-    fraction of the join volume on boilerplate-skewed corpora, with NO
-    semantic concession (unlike the frequency cap).
-
-    The asymmetric prefix theorem: if C(A→B) >= t then A shares at
-    least ``ceil(t·|A|)`` shingles with B, so B must contain one of
-    A's first ``|A| - ceil(t·|A|) + 1`` shingles under ANY total
-    order — the same prefix length as the Jaccard filter, applied to
-    the CONTAINED side only. Index each doc's prefix (rarest-first
-    order); join it against the FULL shingle table as the container
-    side. Hot boilerplate shingles land in every doc's suffix and
-    never enter the prefix index, so the ``df(s)²`` blowup term
-    becomes ``prefixdf(s)·df(s)`` with ``prefixdf(hot) = 0`` — the
-    quadratic term vanishes exactly where the uncapped plan exhausts
-    the heap. Candidates are verified EXACTLY against the full
-    shingle table. Same regime boundary as the Jaccard prefix filter:
-    on near-uniform synthetic shingle distributions verification
-    volume can exceed naive collision counting (see
-    ``ngram_jaccard_pairs_prefix``). MEASURED on the driver-derived
-    corpora (iid-Zipf words, small vocab — pathologically anti-prefix:
-    even "rare" shingles collide broadly, so candidates are not
-    scarce): 50k-doc boilerplate-skew corpus, t=0.8 — naive 48.5 s,
-    prefix 317.7 s. And on the NATURAL heavy-tailed df shape
-    (.localdata/skewnl: Zipf(1.1) 50k-word vocab, 50% sharing a
-    boilerplate header, t=0.8) the ranking flips decisively: prefix
-    6.0 s vs naive 315.7 s — 52x, identical pairs. Use this operator
-    on natural corpora where content shingles are near-unique; on
-    near-uniform distributions use the naive or capped plan.
-    """
-    from pyspark.sql.window import Window
-
-    scope, created = scoped(scope)
-    sh = scope.persist(_doc_shingles(df, id_col, text_col, n))
-    # persisted: consumed by the rank join AND both final size joins
-    # (round 15, same duplicated-subtree note as ngram_jaccard_pairs)
-    sizes = scope.persist(
-        sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
-    )
-
-    freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("__df"))
-    w = Window.partitionBy("id").orderBy(
-        F.col("__df").asc(), F.col("shingle").asc()
-    )
-    # ranked is consumed by BOTH join sides now (round 16: the
-    # container side carries its rank for the positional filter) —
-    # persist it so the freq join + rank window run once.
-    ranked = scope.persist(
-        sh.join(freq, "shingle")
-        .withColumn("__rk", F.row_number().over(w))
-        .join(sizes, "id")
-        .select("id", "shingle", "__rk", "n_sh")
-    )
-    prefix_len = (
-        F.col("n_sh")
-        - F.ceil(F.col("n_sh") * F.lit(threshold) - F.lit(1e-9))
-        + F.lit(1)
-    )
-    pa = (
-        ranked.filter(F.col("__rk") <= prefix_len)
-        .select(
-            F.col("id").alias("id_a"), "shingle",
-            F.col("n_sh").alias("n_a"), F.col("__rk").alias("__rka"),
-        )
-    )
-    pb = ranked.select(
-        F.col("id").alias("id_b"), "shingle",
-        F.col("n_sh").alias("n_b"), F.col("__rk").alias("__rkb"),
-    )
-    # PPJoin POSITIONAL filter, asymmetric form (round 16): a common
-    # shingle at ranks (ra, rb) bounds the overlap by
-    # 1 + min(|A|-ra, |B|-rb); C(A→B) >= t forces overlap >=
-    # ceil(t·|A|). Exact — a valid pair's FIRST common shingle (both
-    # sides rank under the same global rarity order) satisfies the
-    # bound, so the pair survives via that match; the -1e-9 slack only
-    # admits extras and the exact containment threshold is re-applied
-    # after verification. At t = 0.8 this cuts the candidate set hard
-    # (both ranks must sit in the first ~fifth of their documents).
-    alpha = F.ceil(F.col("n_a") * F.lit(threshold) - F.lit(1e-9))
+    else:
+        pair_ok = F.col("id_a") != F.col("id_b")
+        alpha = F.ceil(F.col("n_a") * F.lit(threshold) - F.lit(1e-9))
     cand = (
         pa.join(pb, "shingle")
         .filter(
-            (F.col("id_a") != F.col("id_b"))
+            pair_ok
             & (
                 F.lit(1)
                 + F.least(
@@ -949,16 +772,18 @@ def containment_pairs_prefix(
         .select("id_a", "id_b")
         .distinct()
     )
-
-    # exact verification via per-doc shingle arrays — same round-16
-    # rewrite as ngram_jaccard_pairs_prefix (|cand| rows moved instead
-    # of |cand| × doc-shingles; identical counts)
+    # Exact verification via per-doc shingle ARRAYS (round 16): two
+    # joins against a doc-count-sized array table move |cand| rows, not
+    # |cand| × doc-shingles (the measured 8-10 s stage at sf0.1 when
+    # candidates joined back to the exploded table), and the count is
+    # one JVM array_intersect per pair — identical, since the shingle
+    # table is distinct per doc and array_intersect de-duplicates.
     arrs = scope.persist(
         sh.groupBy("id").agg(F.collect_list("shingle").alias("__shs"))
     )
     aa = arrs.select(F.col("id").alias("id_a"), F.col("__shs").alias("__sa"))
     ab = arrs.select(F.col("id").alias("id_b"), F.col("__shs").alias("__sb"))
-    out = (
+    return (
         cand.join(aa, "id_a")
         .join(ab, "id_b")
         .select(
@@ -970,27 +795,20 @@ def containment_pairs_prefix(
             F.size("__sa").cast("long").alias("n_a"),
             F.size("__sb").cast("long").alias("n_b"),
         )
-        .withColumn(
-            "containment",
-            F.col("n_common").cast("double") / F.col("n_a").cast("double"),
-        )
-        .filter(F.col("containment") >= F.lit(threshold))
-        .select("id_a", "id_b", "n_common", "n_a", "n_b", "containment")
     )
-    return attach(out, scope, created)
 
 
 # ------------------------------------------------------------------
-# Auto-strategy dispatch for the exact pair-dedup family (round 15).
+# Auto-strategy dispatch for ``shingle_pairs`` (round 15).
 #
-# The engine ships three exact-pair plans per metric whose measured
-# winner flips 52x with the corpus's shingle document-frequency shape
-# (BENCH_SCALE round-14 containment table): prefix filtering wins on
-# natural heavy-tailed corpora (content shingles near-unique, hot
-# boilerplate head), naive collision counting wins on near-uniform
-# distributions, and the frequency cap is the only plan that survives
-# near-uniform distributions past the collision-volume budget. At
-# 100 TB picking wrong means a DNF — so probe the histogram and pick.
+# The measured winner among the exact pair plans flips 52x with the
+# corpus's shingle document-frequency shape (BENCH_SCALE round-14
+# containment table): prefix filtering wins on natural heavy-tailed
+# corpora (content shingles near-unique, hot boilerplate head), naive
+# collision counting wins on near-uniform distributions, and the
+# frequency cap is the only plan that survives near-uniform
+# distributions past the collision-volume budget. At 100 TB picking
+# wrong means a DNF — so probe the histogram and pick.
 # ------------------------------------------------------------------
 
 #: Candidate frequency caps the probe prices (per-cap capped collision
@@ -1006,12 +824,12 @@ def shingle_df_stats(
     scope: CacheScope | None = None,
 ) -> dict:
     """ONE-aggregate probe of the shingle document-frequency histogram
-    — the dispatch evidence for ``*_pairs_auto``. Costs one map-side-
-    combined groupBy over the shingle table (the same aggregate the
-    capped and prefix plans compute anyway; the persisted shingle
-    table is shared with the dispatched plan via the scope /
-    CacheManager plan-matching, so the probe's explode is not paid
-    twice). Returns::
+    — the dispatch evidence for ``shingle_pairs(strategy="auto")``.
+    Costs one map-side-combined groupBy over the shingle table (the
+    same aggregate the capped and prefix plans compute anyway; the
+    persisted shingle table is shared with the dispatched plan via the
+    scope / CacheManager plan-matching, so the probe's explode is not
+    paid twice). Returns::
 
         {n_shingles, postings, max_df, p50_df, p90_df, p99_df,
          naive_volume,            # sum(df^2): EXACT row count of the
@@ -1132,98 +950,7 @@ def choose_pair_strategy(
     }
 
 
-def _pair_auto(
-    metric: str,
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int,
-    threshold: float,
-    naive_budget: int,
-    scope: CacheScope | None,
-    decision_out: dict | None,
-) -> DataFrame:
-    import logging
-
-    scope, created = scoped(scope)
-    stats = shingle_df_stats(df, id_col, text_col, n, scope=scope)
-    choice = choose_pair_strategy(stats, naive_budget)
-    logging.getLogger("dwh_with_dask_spark.dedup").info(
-        "%s_pairs_auto: strategy=%s (%s)",
-        metric,
-        choice["strategy"],
-        choice["reason"],
-    )
-    if decision_out is not None:
-        decision_out.update(stats=stats, **choice)
-    fns = {
-        ("jaccard", "naive"): ngram_jaccard_pairs,
-        ("jaccard", "prefix"): ngram_jaccard_pairs_prefix,
-        ("containment", "naive"): containment_pairs,
-        ("containment", "prefix"): containment_pairs_prefix,
-    }
-    kw = dict(
-        id_col=id_col, text_col=text_col, n=n, threshold=threshold,
-        scope=scope,
-    )
-    if choice["strategy"] == "capped":
-        base = (
-            ngram_jaccard_pairs if metric == "jaccard" else containment_pairs
-        )
-        out = base(df, max_shingle_freq=choice["cap"], **kw)
-    else:
-        out = fns[(metric, choice["strategy"])](df, **kw)
-    return attach(out, scope, created)
-
-
-def ngram_jaccard_pairs_auto(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.1,
-    naive_budget: int = 1_000_000_000,
-    scope: CacheScope | None = None,
-    decision_out: dict | None = None,
-) -> DataFrame:
-    """Exact n-gram Jaccard pairs with AUTOMATIC plan choice: probe the
-    shingle df histogram (one aggregate — ``shingle_df_stats``), then
-    dispatch to the measured winner among the naive inverted index,
-    the prefix filter, and (only past the exact-plan budget) the
-    frequency cap — see ``choose_pair_strategy`` for the decision tree
-    and the measurements behind each edge. The choice is logged at
-    INFO and, when ``decision_out`` (a dict) is passed, recorded there
-    as ``{strategy, cap, reason, stats}``. Output schema and — on the
-    naive/prefix branches — exact bit-for-bit results match
-    ``ngram_jaccard_pairs``."""
-    return _pair_auto(
-        "jaccard", df, id_col, text_col, n, threshold, naive_budget,
-        scope, decision_out,
-    )
-
-
-def containment_pairs_auto(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.8,
-    naive_budget: int = 1_000_000_000,
-    scope: CacheScope | None = None,
-    decision_out: dict | None = None,
-) -> DataFrame:
-    """Exact ordered-containment pairs with AUTOMATIC plan choice —
-    the containment twin of ``ngram_jaccard_pairs_auto`` (same probe,
-    same decision tree, same measured regime boundaries; see
-    ``choose_pair_strategy``). On the naive/prefix branches the result
-    is bit-identical to ``containment_pairs``."""
-    return _pair_auto(
-        "containment", df, id_col, text_col, n, threshold, naive_budget,
-        scope, decision_out,
-    )
-
-
-def _minhash_cols(num_hashes: int, hash_family: str) -> list:
+def _minhash_sql(num_hashes: int, hash_family: str) -> list[str]:
     """Per-permutation hash expressions over the ``shingle`` column.
 
     ``xxhash64`` (default for stored indexes written before round 13):
@@ -1232,18 +959,12 @@ def _minhash_cols(num_hashes: int, hash_family: str) -> list:
     2-universal family ``h_i = (a + (i+1)·b) mod 2^32`` over its two
     32-bit big-endian halves — standard minwise-hashing practice
     (Broder et al.; approximate min-wise independence from a universal
-    family), CHEAPER than 64 xxhash64 calls (one hash + 64 codegen'd
-    long multiply-adds, no overflow: a + 64·b < 2^38), and every value
-    rebuilt bit-for-bit by any engine with md5 (the
-    ``corpus_cms_counts`` trick, VERDICT r12 ask #4) — which is what
-    gives the MinHash family hash-match DuckDB oracles instead of
-    rows-only checks."""
-    return [F.expr(s) for s in _minhash_sql(num_hashes, hash_family)]
+    family), CHEAPER than 64 xxhash64 calls, and every value rebuilt
+    bit-for-bit by any engine with md5 (the ``corpus_cms_counts``
+    trick, VERDICT r12 ask #4) — which is what gives the MinHash
+    family hash-match DuckDB oracles instead of rows-only checks.
 
-
-def _minhash_sql(num_hashes: int, hash_family: str) -> list[str]:
-    """The per-permutation hash expressions as SQL STRINGS (round 16):
-    py4j round-trips dominate plan-construction time on this runtime
+    Returned as SQL STRINGS (round 16): py4j round-trips dominate plan-construction time on this runtime
     (~0.5-1 ms per Column call; the 64-hash DSL build alone cost
     seconds per query invocation), so the hot constructors assemble ONE
     SQL string per expression — or one per whole aggregate — and parse
@@ -1260,7 +981,7 @@ def _minhash_sql(num_hashes: int, hash_family: str) -> list[str]:
     # mod 2^32 as a bitmask: a and b are 32-bit non-negative (conv of 8
     # hex chars), so a + 65·b < 2^38 and `x & (2^32-1)` is bit-identical
     # to pmod(x, 2^32) — but one AND instead of pmod's two modulos.
-    # Round-15 A/B (scripts/exp_r15_minhash_mod.py, sf0.1, median of 5):
+    # Round-15 A/B (sf0.1, median of 5):
     # signature build 0.488 s → 0.408 s, full LSH query 0.860 → 0.665 s;
     # signatures asserted bit-identical across all docs before timing.
     # (codegen subexpression elimination evaluates the shared digest
@@ -1281,7 +1002,7 @@ def minhash_signatures(
 ) -> DataFrame:
     """(id, sig: array<bigint>) MinHash signatures over word n-grams.
 
-    Hash family per ``_minhash_cols``: engine-fast ``xxhash64`` seeds
+    Hash family per ``_minhash_sql``: engine-fast ``xxhash64`` seeds
     (default) or cross-engine-deterministic ``md5`` slices. min per
     permutation approximates the permutation min. One explode + one
     groupBy; signature size is num_hashes longs per doc regardless of
@@ -1318,27 +1039,6 @@ def minhash_signatures(
         f"min({s})" for s in _minhash_sql(num_hashes, hash_family)
     ) + ") as sig"
     return sh.groupBy("id").agg(F.expr(sig))
-
-
-def _band_bucket(band: int, r: int, hash_family: str) -> Column:
-    """One band's bucket key from the ``sig`` array column — always
-    ``xxhash64`` over the band's r slot values (round 14; the
-    ``hash_family`` parameter is kept for signature symmetry but no
-    longer selects the bucket function).
-
-    Why the md5 family doesn't need md5 BUCKETS: the bucket is internal
-    grouping plumbing — it never appears in any output, and ANY
-    function injective up to hash collisions produces the SAME
-    candidate set as grouping on the band's raw slot values. The
-    DuckDB oracle twins therefore join candidates on the raw
-    comma-joined slot key (exactly reproducible by construction),
-    while Spark shuffles an 8-byte xxhash64 key. The round-13 60-bit
-    md5 bucket paid one commons-codec digest per exploded band element
-    (interpreted, a MessageDigest per call): the banded stage measured
-    0.57 s md5 vs 0.33 s xxhash64 at sf0.1, and the candidate
-    self-join pays it twice."""
-    vals = ", ".join(f"sig[{band * r + j}]" for j in range(r))
-    return F.expr(f"xxhash64({vals})")
 
 
 def minhash_lsh_pairs(
@@ -1730,7 +1430,6 @@ def _band_buckets(
     num_hashes: int,
     bands: int,
     carry_sig: bool = False,
-    hash_family: str = "xxhash64",
 ) -> DataFrame:
     """(id, band, bucket[, sig]) from a stored signature column — pure
     column arithmetic, no re-shingling.
@@ -1752,7 +1451,17 @@ def _banded_expr(bands: int, r: int):
     """The band-explode generator as ONE parsed expression (round 16,
     same py4j-construction-cost rationale as ``_minhash_sql``):
     explode(array(struct(band, xxhash64(band slots)), ...)) — identical
-    tree to the per-band DSL build."""
+    tree to the per-band DSL build.
+
+    The bucket is always ``xxhash64``, whatever the signature's hash
+    family (round 14): it is internal grouping plumbing that never
+    appears in any output, and ANY function injective up to hash
+    collisions yields the SAME candidate set as grouping on the band's
+    raw slot values. The DuckDB oracle twins therefore join candidates
+    on the raw comma-joined slot key, while Spark shuffles an 8-byte
+    key. The round-13 md5 bucket paid one interpreted digest per
+    exploded band element: the banded stage measured 0.57 s md5 vs
+    0.33 s xxhash64 at sf0.1."""
     entries = ", ".join(
         "struct({b} as band, xxhash64({vals}) as bucket)".format(
             b=band,
@@ -1821,7 +1530,7 @@ def incremental_dedup(
     batch_sigs = scope.persist(
         minhash_signatures(new_df, id_col, text_col, n, num_hashes, hash_family)
     )
-    nb = _band_buckets(batch_sigs, num_hashes, bands, hash_family=hash_family).select(
+    nb = _band_buckets(batch_sigs, num_hashes, bands).select(
         F.col("id").alias("new_id"), "band", "bucket"
     )
     cb = _band_buckets(
@@ -1832,7 +1541,6 @@ def incremental_dedup(
         index.select("id", "sig").where(F.col("sig").isNotNull()),
         num_hashes,
         bands,
-        hash_family=hash_family,
     ).select(F.col("id").alias("corpus_id"), "band", "bucket")
     cand = nb.join(cb, ["band", "bucket"]).select("new_id", "corpus_id").distinct()
 
@@ -1908,13 +1616,13 @@ def minhash_signatures_rowlocal(
 
     if hash_family == "md5":
         # one digest per shingle element, then the 2-universal family —
-        # same values as _minhash_cols' md5 branch
+        # same values as _minhash_sql's md5 branch
         def hash_with_seed(i: int):
             def h(s):
                 digest = F.md5(F.concat(s, F.lit("|mh")))
                 a = F.conv(F.substring(digest, 1, 8), 16, 10).cast("long")
                 b = F.conv(F.substring(digest, 9, 8), 16, 10).cast("long")
-                # same bitmask-for-pmod identity as _minhash_cols
+                # same bitmask-for-pmod identity as _minhash_sql
                 # (round 15): non-negative 32-bit a/b, so the AND is
                 # bit-identical and cheaper than pmod's two modulos.
                 return (a + F.lit(i + 1) * b).bitwiseAND(F.lit(2 ** 32 - 1))

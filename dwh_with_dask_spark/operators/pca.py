@@ -34,13 +34,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType
 
-# round-16 A/B toggle for logreg_fit's training-set persist (VERDICT
-# r15 ask #3): True = the round-15 behavior (persist the projected
-# (vec, target) columns across the GD loop). Flipped only by
-# scripts/exp_r16_logreg_ab.py; the shipped default records the A/B's
-# verdict.
-_PERSIST_TRAIN = True
-
 
 def _gram_partials(df: DataFrame, vec_col: str, dim: int) -> list:
     """One (n, sum_vec, gram) row per partition — executor GEMMs,
@@ -266,15 +259,14 @@ def logreg_fit(
     # loop (round 15): every iteration re-reads ONLY these two columns,
     # and without materialization each of the T scans re-runs the
     # source scan + projection (the MLlib iterative-training idiom —
-    # cache the training set, not the lineage). Round 16: adjudicated
-    # by an interleaved same-process A/B (scripts/exp_r16_logreg_ab.py,
-    # VERDICT r15 ask #3) — see OPTIMIZATION_r16.md for the verdict;
-    # ``_PERSIST_TRAIN`` is the A/B toggle. Identical results either
-    # way — the fold is per-partition and persist preserves partition
+    # cache the training set, not the lineage). Round 16: an
+    # interleaved same-process A/B (median of 5 pairs) came back flat —
+    # embedding_logreg_probe 9.148 s on vs 9.032 s off,
+    # quality_classifier_scores 5.752 s vs 6.246 s — so the persist
+    # stays (OPTIMIZATION_r16.md row 3). Identical results either way:
+    # the fold is per-partition and persist preserves partition
     # contents.
-    src = df.select(vec_col, target_col)
-    if _PERSIST_TRAIN:
-        src = src.persist()
+    src = df.select(vec_col, target_col).persist()
     try:
         n = 0
         mean_loss = float("nan")
@@ -290,8 +282,7 @@ def logreg_fit(
             grad[:-1] += l2 * w[:-1]  # bias unpenalized
             w -= lr * grad
     finally:
-        if _PERSIST_TRAIN:
-            src.unpersist()
+        src.unpersist()
     return w[:-1], float(w[-1]), n, float(mean_loss)
 
 

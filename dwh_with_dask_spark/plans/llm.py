@@ -164,17 +164,18 @@ def dedup_tfidf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("dedup_ngram_jaccard", _JACCARD_EXACT_ORACLE)
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact word-3-gram Jaccard pairs >= 0.30 via the inverted shingle
-    index (operators.dedup.ngram_jaccard_pairs) — integer arithmetic up
+    index (operators.dedup.shingle_pairs, naive) — integer arithmetic up
     to one final division, so it hash-matches the oracle exactly."""
-    return D.ngram_jaccard_pairs(
-        load_table(spark, sf_dir, "documents"), n=3, threshold=0.30
+    return D.shingle_pairs(
+        load_table(spark, sf_dir, "documents"), "jaccard", "naive",
+        n=3, threshold=0.30,
     )
 
 
 @query("dedup_ngram_jaccard_prefix", _JACCARD_EXACT_ORACLE)
 def dedup_ngram_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """AllPairs-style prefix-filtered exact Jaccard
-    (operators.dedup.ngram_jaccard_pairs_prefix): only each document's
+    (operators.dedup.shingle_pairs, prefix): only each document's
     rarest |A| - ceil(t|A|) + 1 shingles enter the index (pairs with
     J >= t provably share a prefix shingle), candidates are verified
     against the full shingle table — bit-identical to
@@ -184,8 +185,9 @@ def dedup_ngram_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver's near-uniform synthetic shingle distribution the naive
     collision count is faster — see the operator docstring for the
     measured regime boundary."""
-    return D.ngram_jaccard_pairs_prefix(
-        load_table(spark, sf_dir, "documents"), n=3, threshold=0.30
+    return D.shingle_pairs(
+        load_table(spark, sf_dir, "documents"), "jaccard", "prefix",
+        n=3, threshold=0.30,
     )
 
 
@@ -229,7 +231,7 @@ _CONTAINMENT_ORACLE = f"""
 
 @query("dedup_containment", _CONTAINMENT_ORACLE)
 def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Asymmetric containment dedup (operators.dedup.containment_pairs):
+    """Asymmetric containment dedup (operators.dedup.shingle_pairs):
     ordered pairs where >= 80% of the contained doc's 3-gram shingles
     appear in the container. Catches quote/subset duplication that
     symmetric Jaccard structurally misses (a short doc inside a long
@@ -237,15 +239,16 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     common-count join, both directions from a 2-element explode;
     integer arithmetic to one final division — full hash-match
     oracle."""
-    return D.containment_pairs(
-        load_table(spark, sf_dir, "documents"), n=3, threshold=0.80
+    return D.shingle_pairs(
+        load_table(spark, sf_dir, "documents"), "containment", "naive",
+        n=3, threshold=0.80,
     )
 
 
 @query("dedup_containment_prefix", _CONTAINMENT_ORACLE)
 def dedup_containment_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT prefix-filtered containment
-    (operators.dedup.containment_pairs_prefix): only each doc's
+    (operators.dedup.shingle_pairs, prefix): only each doc's
     |A| - ceil(t|A|) + 1 rarest shingles enter the index as contained-
     side candidates (the asymmetric prefix theorem), the container side
     stays full, candidates verify exactly — bit-identical to
@@ -253,15 +256,16 @@ def dedup_containment_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     boilerplate shingles never enter the prefix, so the df² blowup
     that exhausts the uncapped plan's heap at sf10 becomes
     prefixdf·df with prefixdf(hot) = 0."""
-    return D.containment_pairs_prefix(
-        load_table(spark, sf_dir, "documents"), n=3, threshold=0.80
+    return D.shingle_pairs(
+        load_table(spark, sf_dir, "documents"), "containment", "prefix",
+        n=3, threshold=0.80,
     )
 
 
 @query("dedup_ngram_jaccard_auto", _JACCARD_EXACT_ORACLE)
 def dedup_ngram_jaccard_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Auto-dispatched exact Jaccard
-    (operators.dedup.ngram_jaccard_pairs_auto): one cheap aggregate
+    (operators.dedup.shingle_pairs, auto): one cheap aggregate
     over the shingle df histogram picks the measured winner — prefix
     on heavy-tailed natural corpora (52x on skewnl), naive on
     near-uniform synthetic ones, frequency cap only past the
@@ -269,19 +273,21 @@ def dedup_ngram_jaccard_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-uniform-within-budget and dispatches to the naive plan, so
     the result hash-matches the same exact oracle as
     dedup_ngram_jaccard."""
-    return D.ngram_jaccard_pairs_auto(
-        load_table(spark, sf_dir, "documents"), n=3, threshold=0.30
+    return D.shingle_pairs(
+        load_table(spark, sf_dir, "documents"), "jaccard", "auto",
+        n=3, threshold=0.30,
     )
 
 
 @query("dedup_containment_auto", _CONTAINMENT_ORACLE)
 def dedup_containment_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Auto-dispatched exact containment
-    (operators.dedup.containment_pairs_auto) — same histogram probe
+    (operators.dedup.shingle_pairs, auto) — same histogram probe
     and decision tree as the Jaccard twin; exact oracle because the
     driver corpora dispatch to an exact branch."""
-    return D.containment_pairs_auto(
-        load_table(spark, sf_dir, "documents"), n=3, threshold=0.80
+    return D.shingle_pairs(
+        load_table(spark, sf_dir, "documents"), "containment", "auto",
+        n=3, threshold=0.80,
     )
 
 
@@ -334,8 +340,10 @@ def dedup_containment_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     at sf10 (500k synthetic docs) where this capped plan completes; on
     boilerplate-skewed natural corpora the cap removes exactly the hot
     boilerplate. The DuckDB oracle applies the identical cap."""
-    return D.containment_pairs(
+    return D.shingle_pairs(
         load_table(spark, sf_dir, "documents"),
+        "containment",
+        "naive",
         n=3,
         threshold=0.80,
         max_shingle_freq=50,
@@ -379,8 +387,10 @@ def dedup_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     sizes |A|, |B| stay uncapped, so J is exact for pairs untouched by
     the cap and slightly underestimated for capped ones; the DuckDB
     oracle applies the identical cap, so this is hash-checked too."""
-    return D.ngram_jaccard_pairs(
+    return D.shingle_pairs(
         load_table(spark, sf_dir, "documents"),
+        "jaccard",
+        "naive",
         n=3,
         threshold=0.30,
         max_shingle_freq=50,
@@ -434,11 +444,13 @@ def dedup_connected_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     The DuckDB oracle computes the same fixpoint with a recursive CTE —
     one of the rare iterative operators with an exact SQL twin."""
     docs = load_table(spark, sf_dir, "documents")
-    pairs = D.ngram_jaccard_pairs(docs, n=3, threshold=0.30).select("id_a", "id_b")
+    pairs = D.shingle_pairs(docs, "jaccard", "naive", n=3, threshold=0.30).select(
+        "id_a", "id_b"
+    )
     return D.dedup_components(docs, pairs)
 
 
-# DuckDB twin of dedup._minhash_cols' md5 family + the banded LSH:
+# DuckDB twin of dedup._minhash_sql's md5 family + the banded LSH:
 # identical (a + (i+1)*b) mod 2^32 values from one md5 digest; the
 # candidate join groups on the RAW band slot key (equivalent to
 # Spark's xxhash64 bucket up to hash collisions, round 14) — so

@@ -95,7 +95,7 @@ def flag_against_index(
     # stream-stream self-join back to the signature frame, hence no
     # unbounded join state in a continuous query.
     nb = _band_buckets(
-        sigs, num_hashes, bands, carry_sig=True, hash_family=hash_family
+        sigs, num_hashes, bands, carry_sig=True
     ).select(
         F.col("id").alias("doc_id"), "band", "bucket", "sig"
     )
@@ -107,7 +107,6 @@ def flag_against_index(
         index.select("id", "sig").where(F.col("sig").isNotNull()),
         num_hashes,
         bands,
-        hash_family=hash_family,
     ).select(F.col("id").alias("corpus_id"), "band", "bucket")
     agree = F.size(
         F.filter(F.zip_with("sig", "sig_c", lambda x, y: x == y), lambda m: m)

@@ -1518,16 +1518,19 @@ def main() -> None:
         )
         nl_oracle = oracles["dedup_ngram_jaccard"].replace(">= 0.30", ">= 0.80")
         nl_rows = []
-        for name, op in (
-            ("naive inverted-index (t=0.8)", DD.ngram_jaccard_pairs),
-            ("prefix-filtered (t=0.8)", DD.ngram_jaccard_pairs_prefix),
+        for name, strategy in (
+            ("naive inverted-index (t=0.8)", "naive"),
+            ("prefix-filtered (t=0.8)", "prefix"),
         ):
+            def op(strategy=strategy):
+                return DD.shingle_pairs(
+                    nl_docs, "jaccard", strategy, n=3, threshold=0.8
+                )
+
             s = timed_spark(
-                spark, name,
-                lambda sp, _d, op=op: op(nl_docs, n=3, threshold=0.8),
-                SKEWNL_DIR, args.runs,
+                spark, name, lambda sp, _d, op=op: op(), SKEWNL_DIR, args.runs
             )
-            n_pairs = op(nl_docs, n=3, threshold=0.8).count()
+            n_pairs = op().count()
             nl_rows.append((name, f"{s:.3f}", n_pairs))
             print(f"skewnl {name}: spark={s}s pairs={n_pairs}", flush=True)
         d_nl = med(time_duck(nl_duck, nl_oracle, args.runs))

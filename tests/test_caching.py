@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from dwh_with_dask_spark.operators.caching import CacheScope, release_caches
 from dwh_with_dask_spark.operators.curation import contamination_pairs
-from dwh_with_dask_spark.operators.dedup import minhash_lsh_pairs, ngram_jaccard_pairs
+from dwh_with_dask_spark.operators.dedup import minhash_lsh_pairs, shingle_pairs
 from dwh_with_dask_spark.operators.ids import sequential_id
 
 
@@ -34,7 +34,7 @@ def docs(spark):
 def test_ngram_jaccard_scope_releases(spark, docs):
     base = _persisted_ids(spark)
     with CacheScope() as scope:
-        pairs = ngram_jaccard_pairs(docs, threshold=0.0, scope=scope)
+        pairs = shingle_pairs(docs, "jaccard", "naive", threshold=0.0, scope=scope)
         pairs.count()
         created = _persisted_ids(spark) - base
         assert created  # the shingle index is pinned while in use
@@ -90,7 +90,7 @@ def test_private_scope_attached_and_releasable(spark, docs):
     # No caller scope: the operator attaches its private scope to the
     # result so release_caches() can free it after the final action.
     base = _persisted_ids(spark)
-    pairs = ngram_jaccard_pairs(docs, threshold=0.0)
+    pairs = shingle_pairs(docs, "jaccard", "naive", threshold=0.0)
     pairs.count()
     created = _persisted_ids(spark) - base
     assert created
@@ -105,7 +105,7 @@ def test_released_result_still_correct(spark, docs):
     # Jaccard pairs; sequential_id explicitly forbids it — see its
     # docstring warning about the nondeterministic stamp.)
     with CacheScope() as scope:
-        pairs = ngram_jaccard_pairs(docs, threshold=0.0, scope=scope)
+        pairs = shingle_pairs(docs, "jaccard", "naive", threshold=0.0, scope=scope)
         before = pairs.count()
     assert pairs.count() == before
 

@@ -43,7 +43,9 @@ def test_exact_dedup_groups(spark, near_dup_docs):
 def test_jaccard_finds_planted_near_dup(spark, near_dup_docs):
     pairs = {
         (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in D.ngram_jaccard_pairs(near_dup_docs, threshold=0.3).collect()
+        for r in D.shingle_pairs(
+            near_dup_docs, "jaccard", "naive", threshold=0.3
+        ).collect()
     }
     assert pairs[(1, 2)] == 1.0
     assert 0.5 < pairs[(1, 3)] < 1.0
@@ -59,7 +61,9 @@ def test_minhash_lsh_agrees_with_exact_jaccard(spark, near_dup_docs):
     }
     exact = {
         (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in D.ngram_jaccard_pairs(near_dup_docs, threshold=0.3).collect()
+        for r in D.shingle_pairs(
+            near_dup_docs, "jaccard", "naive", threshold=0.3
+        ).collect()
     }
     assert got[(1, 2)] == 1.0                  # identical docs always collide
     assert (1, 3) in got                       # near dup found by LSH
@@ -135,7 +139,7 @@ def test_minhash_vs_exact_on_documents_table(spark):
     docs = load_table(spark, SF_CORRECT, "documents")
     exact = {
         (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in D.ngram_jaccard_pairs(docs, threshold=0.5).collect()
+        for r in D.shingle_pairs(docs, "jaccard", "naive", threshold=0.5).collect()
     }
     lsh = {
         (r["id_a"], r["id_b"]): r["est_jaccard"]
@@ -365,35 +369,6 @@ def test_connected_components_random_graphs_property(spark):
         assert got == want, f"seed {seed}"
 
 
-def test_prefix_jaccard_equals_naive_across_thresholds(spark):
-    # Prefix filtering is pruning, not approximation: at every threshold
-    # the candidate-verify pipeline must return exactly the naive
-    # operator's rows (ids, counts, and the jaccard value itself).
-    # Deterministic varied corpus: overlapping word windows + planted
-    # dups across a range of doc lengths.
-    words = [f"w{i}" for i in range(60)]
-    rows = []
-    for d in range(30):
-        start, length = (d * 7) % 40, 8 + (d % 13)
-        toks = [words[(start + k) % 60] for k in range(length)]
-        rows.append((d, " ".join(toks)))
-    rows += [(100, rows[3][1]), (101, rows[3][1] + " extra tail words here")]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-
-    for t in (0.1, 0.3, 0.5, 0.8):
-        naive = {
-            (r["id_a"], r["id_b"]): (r["n_common"], r["n_a"], r["n_b"], r["jaccard"])
-            for r in D.ngram_jaccard_pairs(docs, threshold=t).collect()
-        }
-        pref = {
-            (r["id_a"], r["id_b"]): (r["n_common"], r["n_a"], r["n_b"], r["jaccard"])
-            for r in D.ngram_jaccard_pairs_prefix(docs, threshold=t).collect()
-        }
-        assert pref == naive, f"threshold {t}: prefix != naive"
-    # planted exact dup (3,100) has J=1.0, so even t=0.8 is non-vacuous
-    assert naive
-
-
 def test_incremental_dedup_against_stored_index(spark, tmp_path):
     # Corpus indexed once (round-tripped through parquet, as stored);
     # a new batch is checked against the index without re-shingling the
@@ -481,8 +456,8 @@ def test_minhash_signatures_multiset_invariant(spark):
         }
         dedup_sh = D._doc_shingles(docs, "doc_id", "text", 3)
         mh = [
-            F.min(c).alias(f"h{i}")
-            for i, c in enumerate(D._minhash_cols(64, fam))
+            F.min(F.expr(c)).alias(f"h{i}")
+            for i, c in enumerate(D._minhash_sql(64, fam))
         ]
         agg = dedup_sh.groupBy("id").agg(*mh)
         want = {
@@ -519,7 +494,7 @@ _MC_B = (
 
 
 def _py_md5_sig(text, num_hashes=64, n=3):
-    """Pure-Python replica of the md5 minhash family (dedup._minhash_cols)."""
+    """Pure-Python replica of the md5 minhash family (dedup._minhash_sql)."""
     import hashlib
 
     t = [w for w in text.lower().split() if w]
@@ -1853,11 +1828,13 @@ def test_containment_catches_subset_jaccard_misses(spark):
     )
     rows = {
         (r.id_a, r.id_b): r.containment
-        for r in D.containment_pairs(df, n=3, threshold=0.8).collect()
+        for r in D.shingle_pairs(
+            df, "containment", "naive", n=3, threshold=0.8
+        ).collect()
     }
     assert rows == {(1, 2): 1.0}  # contained direction only, exactly 1.0
     # symmetric Jaccard at the same threshold sees nothing
-    assert D.ngram_jaccard_pairs(df, n=3, threshold=0.8).count() == 0
+    assert D.shingle_pairs(df, "jaccard", "naive", n=3, threshold=0.8).count() == 0
 
 
 def test_containment_matches_bruteforce_twin(spark):
@@ -1893,7 +1870,9 @@ def test_containment_matches_bruteforce_twin(spark):
                 want[(a, b)] = (len(sh[a] & sh[b]), len(sh[a]), len(sh[b]), c)
     got = {
         (r.id_a, r.id_b): (r.n_common, r.n_a, r.n_b, r.containment)
-        for r in D.containment_pairs(df, n=3, threshold=0.5).collect()
+        for r in D.shingle_pairs(
+            df, "containment", "naive", n=3, threshold=0.5
+        ).collect()
     }
     assert got == want
     assert (100, 0) in got and (0, 100) in got  # exact dup passes both ways
@@ -1967,11 +1946,13 @@ def test_containment_superset_of_jaccard_property(spark):
         t = rng.choice([0.2, 0.4, 0.6])
         jac = {
             frozenset((r.id_a, r.id_b))
-            for r in D.ngram_jaccard_pairs(df, n=3, threshold=t).collect()
+            for r in D.shingle_pairs(df, "jaccard", "naive", n=3, threshold=t).collect()
         }
         con = {
             frozenset((r.id_a, r.id_b))
-            for r in D.containment_pairs(df, n=3, threshold=t).collect()
+            for r in D.shingle_pairs(
+                df, "containment", "naive", n=3, threshold=t
+            ).collect()
         }
         assert jac <= con, (
             f"seed {seed}, t={t}: jaccard pairs missing from containment: "
@@ -1979,10 +1960,21 @@ def test_containment_superset_of_jaccard_property(spark):
         )
 
 
-def test_containment_prefix_equals_naive(spark):
-    """containment_pairs_prefix is a pruning strategy, not a semantic
-    change: identical output to the naive plan on a corpus with planted
-    subsets and near-duplicates, across thresholds."""
+def _prefix_jaccard_corpus(spark):
+    """Deterministic varied corpus: overlapping word windows + planted
+    dups across a range of doc lengths."""
+    words = [f"w{i}" for i in range(60)]
+    rows = []
+    for d in range(30):
+        start, length = (d * 7) % 40, 8 + (d % 13)
+        toks = [words[(start + k) % 60] for k in range(length)]
+        rows.append((d, " ".join(toks)))
+    rows += [(100, rows[3][1]), (101, rows[3][1] + " extra tail words here")]
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def _prefix_containment_corpus(spark):
+    """Random-ish corpus with a planted exact dup and a planted subset."""
     import random
 
     rng = random.Random(17)
@@ -1994,18 +1986,106 @@ def test_containment_prefix_equals_naive(spark):
     docs.append((50, docs[0][1]))  # exact dup
     toks = docs[1][1].split()
     docs.append((51, " ".join(toks[: max(4, len(toks) // 2)])))  # subset-ish
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    for t in (0.5, 0.8):
-        naive = {
-            (r.id_a, r.id_b): (r.n_common, r.n_a, r.n_b, r.containment)
-            for r in D.containment_pairs(df, n=3, threshold=t).collect()
-        }
-        pref = {
-            (r.id_a, r.id_b): (r.n_common, r.n_a, r.n_b, r.containment)
-            for r in D.containment_pairs_prefix(df, n=3, threshold=t).collect()
-        }
-        assert pref == naive, f"t={t}"
+    return spark.createDataFrame(docs, "doc_id long, text string")
+
+
+def _pair_rows(df, kind, strategy, threshold, **kw):
+    return {
+        (r.id_a, r.id_b): (r.n_common, r.n_a, r.n_b, r[kind])
+        for r in D.shingle_pairs(
+            df, kind, strategy, threshold=threshold, **kw
+        ).collect()
+    }
+
+
+@pytest.mark.parametrize(
+    "kind, corpus, thresholds",
+    [
+        ("jaccard", _prefix_jaccard_corpus, (0.1, 0.3, 0.5, 0.8)),
+        ("containment", _prefix_containment_corpus, (0.5, 0.8)),
+    ],
+    ids=["jaccard", "containment"],
+)
+def test_prefix_equals_naive_across_thresholds(spark, kind, corpus, thresholds):
+    """Prefix filtering is pruning, not approximation: at every
+    threshold the candidate-verify pipeline returns exactly the naive
+    plan's rows (ids, counts, and the score itself). The planted exact
+    dup scores 1.0, so even the highest threshold is non-vacuous."""
+    df = corpus(spark)
+    for t in thresholds:
+        naive = _pair_rows(df, kind, "naive", t)
+        assert _pair_rows(df, kind, "prefix", t) == naive, f"t={t}"
         assert naive, f"t={t}: fixture produced no pairs"
+
+
+def _degenerate_inputs(spark):
+    same = "the same four words repeated here"
+    schema = "doc_id long, text string"
+    return {
+        "empty": spark.createDataFrame([], schema),
+        "single": spark.createDataFrame([(1, "one lonely document here")], schema),
+        "shorter_than_n": spark.createDataFrame(
+            [(1, "two words"), (2, "two words"), (3, "one")], schema
+        ),
+        "null_and_blank": spark.createDataFrame(
+            [(1, None), (2, ""), (3, "   "), (4, "a b c d"), (5, "a b c d")],
+            schema,
+        ),
+        "identical": spark.createDataFrame(
+            [(i, same) for i in range(4)], schema
+        ),
+        "negative_ids": spark.createDataFrame(
+            [(-3, "x y z w"), (-1, "x y z w v"), (2, "p q r s")], schema
+        ),
+    }
+
+
+@pytest.mark.parametrize("kind", ["jaccard", "containment"])
+@pytest.mark.parametrize(
+    "strategy, kw",
+    [
+        ("naive", {}),
+        ("prefix", {}),
+        ("auto", {}),
+        ("naive", {"max_shingle_freq": 2}),
+    ],
+    ids=["naive", "prefix", "auto", "capped"],
+)
+def test_shingle_pairs_degenerate_inputs(spark, kind, strategy, kw):
+    """Empty frames, a single doc, docs shorter than n, null and blank
+    text, all-identical docs and negative ids: no strategy crashes, and
+    every exact strategy returns the naive plan's rows. The cap of 2
+    binds only on the four identical docs, whose every shingle is then
+    hot — so the capped plan finds no pair there."""
+    for name, df in _degenerate_inputs(spark).items():
+        want = _pair_rows(df, kind, "naive", 0.5)
+        got = _pair_rows(df, kind, strategy, 0.5, **kw)
+        if kw and name == "identical":
+            assert got == {}, name
+        else:
+            assert got == want, f"{name}: {strategy} {kw} != naive"
+        if name in ("empty", "single", "shorter_than_n"):
+            assert want == {}, name
+        if name == "null_and_blank":
+            assert set(want) == ({(4, 5)} if kind == "jaccard" else {(4, 5), (5, 4)})
+        if name == "identical":
+            # C(4,2) unordered pairs; containment emits both directions
+            assert len(want) == (6 if kind == "jaccard" else 12)
+            assert all(v[3] == 1.0 for v in want.values())
+        if name == "negative_ids":
+            assert (-3, -1) in want
+
+
+def test_shingle_pairs_rejects_bad_arguments(spark):
+    df = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="kind"):
+        D.shingle_pairs(df, "cosine", "naive", threshold=0.5)
+    with pytest.raises(ValueError, match="strategy"):
+        D.shingle_pairs(df, "jaccard", "minhash", threshold=0.5)
+    with pytest.raises(ValueError, match="max_shingle_freq"):
+        D.shingle_pairs(
+            df, "jaccard", "prefix", threshold=0.5, max_shingle_freq=10
+        )
 
 
 # ---------------------------------------------------------------------------
@@ -2059,35 +2139,19 @@ def test_pair_auto_dispatch_picks_measured_winner(spark):
     assert s_nat["p90_df"] <= 2 and s_nat["max_df"] > 100
     assert s_uni["p90_df"] > 2
 
-    for metric, auto_fn, naive_fn, t in [
-        ("containment", D.containment_pairs_auto, D.containment_pairs, 0.8),
-        ("jaccard", D.ngram_jaccard_pairs_auto, D.ngram_jaccard_pairs, 0.3),
-    ]:
-        score = metric if metric == "jaccard" else "containment"
+    for metric, t in [("containment", 0.8), ("jaccard", 0.3)]:
         dec = {}
-        got = {
-            (r.id_a, r.id_b): (r.n_common, r.n_a, r.n_b, r[score])
-            for r in auto_fn(nat, threshold=t, decision_out=dec).collect()
-        }
+        got = _pair_rows(nat, metric, "auto", t, decision_out=dec)
         assert dec["strategy"] == "prefix", (metric, dec["reason"])
-        want = {
-            (r.id_a, r.id_b): (r.n_common, r.n_a, r.n_b, r[score])
-            for r in naive_fn(nat, threshold=t).collect()
-        }
+        want = _pair_rows(nat, metric, "naive", t)
         assert got == want and want, metric
         if metric == "containment":
             assert any(a == 1 and b == 9000 for a, b, in got)  # planted
 
         dec = {}
-        got = {
-            (r.id_a, r.id_b): (r.n_common, r.n_a, r.n_b, r[score])
-            for r in auto_fn(uni, threshold=t, decision_out=dec).collect()
-        }
+        got = _pair_rows(uni, metric, "auto", t, decision_out=dec)
         assert dec["strategy"] == "naive", (metric, dec["reason"])
-        want = {
-            (r.id_a, r.id_b): (r.n_common, r.n_a, r.n_b, r[score])
-            for r in naive_fn(uni, threshold=t).collect()
-        }
+        want = _pair_rows(uni, metric, "naive", t)
         assert got == want and want, metric
 
 
@@ -2097,8 +2161,9 @@ def test_pair_auto_capped_fallback_past_budget(spark):
     uni = _uniform_corpus(spark)
     stats = D.shingle_df_stats(uni)
     dec = {}
-    out = D.containment_pairs_auto(
-        uni, threshold=0.8, naive_budget=1, decision_out=dec
+    out = D.shingle_pairs(
+        uni, "containment", "auto", threshold=0.8, naive_budget=1,
+        decision_out=dec,
     )
     assert dec["strategy"] == "capped"
     assert dec["cap"] == 10  # floor: even the tightest cap exceeds budget 1

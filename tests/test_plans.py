@@ -10,6 +10,7 @@ from __future__ import annotations
 import io
 from contextlib import redirect_stdout
 
+import pytest
 from pyspark.sql import functions as F
 
 from dwh_with_dask_spark.plans import QUERIES
@@ -491,9 +492,14 @@ def test_widen_adds_no_exchange_on_wide_input(spark):
     assert logical(out_narrow).count("RepartitionByExpression") == 1
 
 
-def test_jaccard_plan_no_shingle_reshuffle(spark):
+@pytest.mark.parametrize(
+    "name",
+    ["dedup_ngram_jaccard", "dedup_ngram_jaccard_capped", "dedup_containment"],
+)
+def test_jaccard_plan_no_shingle_reshuffle(spark, name):
     """VERDICT r6 ask #2: watch the ACTUAL hazards of the Jaccard plan,
-    not just exchange counts. Two invariants on the real registry query:
+    not just exchange counts. Two invariants on each registry query
+    built on the shared ``shingle_pairs`` shingle stage:
 
     1. No tokenize re-inlining: the `split(lower(text))` tokenize
        expression must be bound exactly once per `__toks` projection in
@@ -510,7 +516,7 @@ def test_jaccard_plan_no_shingle_reshuffle(spark):
     """
     import re
 
-    df = QUERIES["dedup_ngram_jaccard"](spark, SF_CORRECT)
+    df = QUERIES[name](spark, SF_CORRECT)
     qe = df._jdf.queryExecution()
     opt = qe.optimizedPlan().toString()
 
