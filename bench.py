@@ -149,6 +149,9 @@ def main() -> None:
     for name in HEADLINE:
         fn = QUERIES[name]
         materialize(fn(spark, sf_dir))  # warmup (JIT, code cache, FS cache)
+        # operators without a caller scope leave their persists in the
+        # session; clear them so no run reuses a previous run's data
+        spark.catalog.clearCache()
         jvm_gc(spark)
         task0 = executor_task_ms(spark)
         runs = []
@@ -156,6 +159,7 @@ def main() -> None:
             t0 = time.perf_counter()
             materialize(fn(spark, sf_dir))
             runs.append(time.perf_counter() - t0)
+            spark.catalog.clearCache()
         # mean executor task time per run (sum of task durations across
         # the RUNS timed runs / RUNS) — the core-scaling denominator
         task_sec[name] = round(

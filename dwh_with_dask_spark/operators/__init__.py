@@ -6,15 +6,13 @@ semantics). All are plain functions DataFrame → DataFrame so they chain
 lazily and Catalyst optimizes across operator boundaries.
 """
 
-from dwh_with_dask_spark.operators.caching import CacheScope, release_caches
-from dwh_with_dask_spark.operators.ids import fast_id, sequential_id
+from dwh_with_dask_spark.operators.caching import CacheScope
+from dwh_with_dask_spark.operators.ids import sequential_id
 from dwh_with_dask_spark.operators.joins import asof_join, range_join, salted_join
 from dwh_with_dask_spark.operators.sessionize import sessionize_outline
 
 __all__ = [
     "CacheScope",
-    "release_caches",
-    "fast_id",
     "sequential_id",
     "asof_join",
     "range_join",

@@ -147,12 +147,12 @@ def audio_near_dup_pairs(
     exactly) 1.0 — see the module docstring's quantization note; pick
     thresholds accordingly (>= 0.9 finds gain/noise copies in tests).
     """
-    from dwh_with_dask_spark.operators.caching import attach, scoped
+    from dwh_with_dask_spark.operators.caching import CacheScope
 
     # Persisted: the fingerprint table feeds BOTH join sides — without
     # it each side re-decodes every clip. Lifecycle: caller-owned via
     # ``scope`` (operators.caching), released after the final action.
-    scope, created = scoped(scope)
+    scope = scope or CacheScope()
     fps = scope.persist(audio_fingerprints(media, rate=rate))
     sub = fps.select(
         F.col("content_hash").alias("id"),
@@ -197,4 +197,4 @@ def audio_near_dup_pairs(
             ).alias("overlap"),
         )
     )
-    return attach(out, scope, created)
+    return out

@@ -2,13 +2,12 @@
 
 Several operators materialize an intermediate table because multiple
 consumers in their own plan would otherwise re-derive it (the inverted
-shingle index in ``dedup.shingle_pairs``, the MinHash signature
-table in ``dedup.minhash_lsh_pairs``, the fingerprint table in
-``curation.contamination_pairs``, the partition stamp in
-``ids.sequential_id``). Those persists cannot be released inside the
-operator: the returned DataFrame is lazy and still references them, so
-unpersisting before the caller materializes would silently recompute
-the expensive stage and negate the persist.
+shingle index in ``dedup.shingle_pairs``, the MinHash signature table
+in ``dedup.minhash_lsh_pairs``, the fingerprint table in
+``curation.contamination_pairs``). Those persists cannot be released
+inside the operator: the returned DataFrame is lazy and still
+references them, so unpersisting before the caller materializes would
+silently recompute the expensive stage and negate the persist.
 
 ``CacheScope`` makes the lifecycle explicit and caller-owned:
 
@@ -18,15 +17,15 @@ the expensive stage and negate the persist.
         result = pairs.collect()          # caches live while needed
     # scope exit unpersists every intermediate — nothing left behind
 
-When the caller does not pass a scope, the operator creates a private
-one and attaches it to the returned DataFrame as ``df.cache_scope``;
-``release_caches(df)`` releases it after the final action. (Note that
-further transformations return NEW DataFrame objects without the
-attribute — grab the scope from the operator's direct return value.)
-
-Without either, cached blocks are reclaimed only when the driver GCs
-the last reference (Spark's ContextCleaner) — bounded, but
-nondeterministic; long-lived sessions should use the explicit scope.
+When the caller does not pass a scope, the operator persists through a
+throwaway ``CacheScope()``: the "already cached, don't claim it" rule
+of ``CacheScope.persist`` still applies, and the entries belong to the
+session until ``spark.catalog.clearCache()``. Dropping the result does
+not free them: CacheManager holds its own reference to each cached
+plan, so neither Python nor JVM garbage collection reclaims the
+blocks. Long-lived sessions pass a scope, or clear the session cache
+between independent units of work (the registry runners do the
+latter).
 """
 
 from __future__ import annotations
@@ -73,32 +72,3 @@ class CacheScope:
     def __exit__(self, *exc) -> None:
         self.release()
 
-
-def scoped(scope: CacheScope | None) -> tuple[CacheScope, bool]:
-    """Resolve an operator's ``scope`` argument: reuse the caller's scope
-    or create a private one (returned flag = created-here, meaning the
-    operator should attach it to its result)."""
-    if scope is not None:
-        return scope, False
-    return CacheScope(), True
-
-
-def attach(result: DataFrame, scope: CacheScope, created: bool) -> DataFrame:
-    """Expose a privately created scope on the returned DataFrame as
-    ``result.cache_scope`` so callers can release it after the final
-    action. No-op when the scope was caller-supplied."""
-    if created:
-        result.cache_scope = scope  # type: ignore[attr-defined]
-    return result
-
-
-def release_caches(df: DataFrame, blocking: bool = False) -> None:
-    """Release the private scope attached by an operator, if any.
-
-    Guarded by an isinstance check: ``getattr`` on a DataFrame falls
-    through to column resolution, so a real column named ``cache_scope``
-    would return a Column here rather than a scope.
-    """
-    scope = getattr(df, "cache_scope", None)
-    if isinstance(scope, CacheScope):
-        scope.release(blocking)

@@ -30,7 +30,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from dwh_with_dask_spark.operators.caching import CacheScope, attach, scoped
+from dwh_with_dask_spark.operators.caching import CacheScope
 from dwh_with_dask_spark.operators.partitioning import barrier, widen
 from dwh_with_dask_spark.operators.textstats import tokens
 
@@ -285,13 +285,13 @@ def dsir_resample(
     tokenize+explode (state O(buckets)); the resample adds one
     broadcast-or-shuffle join batch-keyed on ``id_col`` and a top-k —
     nothing corpus-ordered, nothing driver-side."""
-    scope, created = scoped(scope)
+    scope = scope or CacheScope()
     wts = dsir_importance(
         df, target, text_col, id_col, buckets, smoothing, scope=scope
     )
     joined = df.join(wts.select(id_col, "dsir_logw"), id_col)
     out = log_weighted_sample(joined, k, "dsir_logw", id_col, salt=salt)
-    return attach(out, scope, created)
+    return out
 
 
 def pack_sequences(
@@ -457,7 +457,7 @@ def contamination_pairs(
     # corpus (min-md5 over every 5-gram — the expensive part). Three
     # narrow columns per doc is the cheap thing to store. Lifecycle:
     # caller-owned via ``scope`` (operators.caching).
-    scope, created = scoped(scope)
+    scope = scope or CacheScope()
     tagged = scope.persist(
         df.select(
             F.col(id_col),
@@ -471,7 +471,7 @@ def contamination_pairs(
         .join(train_fps, "fingerprint", "left_semi")
         .select(id_col, "split", "fingerprint")
     )
-    return attach(out, scope, created)
+    return out
 
 
 # --- Bloom-filter decontamination ---------------------------------------
@@ -506,9 +506,8 @@ def token_budget_sample(
     (#partitions × #sources tiny rows), broadcast the offsets back,
     and finish with a window over (pid, source) — partition-LOCAL
     slices, bounded by partition size, parallel across the cluster.
-    The carried-offsets frame must be consumed within the operator's
-    ``CacheScope`` (same ``sequential_id`` contract: the pid/mid stamp
-    is pinned by the persist).
+    The pid stamp is pinned by a persist through ``scope``: act on the
+    result before releasing a caller-supplied scope.
 
     Output: (id, source, n_tokens, cum_tokens) for every kept doc.
 
@@ -521,7 +520,7 @@ def token_budget_sample(
     """
     from dwh_with_dask_spark.operators.dedup import text_tokens
 
-    scope, created = scoped(scope)
+    scope = scope or CacheScope()
     tok = (
         F.col(token_col)
         if token_col is not None
@@ -599,7 +598,7 @@ def token_budget_sample(
         .filter(F.col("cum_tokens") <= budget_col)
         .select("id", "source", "n_tokens", "cum_tokens")
     )
-    return attach(out, scope, created)
+    return out
 
 
 def ngram_decontaminate(
@@ -633,7 +632,7 @@ def ngram_decontaminate(
     """
     from dwh_with_dask_spark.operators.dedup import _doc_shingles
 
-    scope, created = scoped(scope)
+    scope = scope or CacheScope()
     sh = scope.persist(
         _doc_shingles(df, id_col, text_col, n).withColumn(
             "split", hash_split(F.col("id"), train, val)
@@ -657,7 +656,7 @@ def ngram_decontaminate(
             F.col("n_shared").cast("double") / F.col("n_grams").cast("double")
         ).alias("share_frac"),
     )
-    return attach(out, scope, created)
+    return out
 
 
 def bloom_positions(
@@ -707,7 +706,7 @@ def bloom_decontaminate(
     """
     from dwh_with_dask_spark.operators.textstats import doc_fingerprint
 
-    scope, created = scoped(scope)
+    scope = scope or CacheScope()
     tagged = scope.persist(
         df.select(
             F.col(id_col),
@@ -730,7 +729,7 @@ def bloom_decontaminate(
         .agg(F.sum(F.coalesce(F.col("__set"), F.lit(0))).alias("n_hits"))
         .withColumn("contaminated", F.col("n_hits") == k)
     )
-    return attach(out, scope, created)
+    return out
 
 
 # --- Out-of-vocabulary rate ----------------------------------------------
@@ -1550,8 +1549,8 @@ def dsir_importance(
     feature stream (never a corpus-sized shuffle for the stats side);
     one groupBy(id) mean. The hashing trick is what makes the
     estimator 100 TB-shaped: vocabulary size never appears, state is
-    O(buckets). When ``scope`` is None a private scope is attached to
-    the result as ``.cache_scope`` (see operators/caching.py).
+    O(buckets). When ``scope`` is None the persist stays until
+    ``spark.catalog.clearCache()`` (see operators/caching.py).
     """
     from dwh_with_dask_spark.operators.dedup import text_tokens
     from dwh_with_dask_spark.operators.partitioning import widen
@@ -1575,7 +1574,7 @@ def dsir_importance(
             ),
         ).otherwise(F.array().cast("array<string>")),
     )
-    scope, created = scoped(scope)
+    scope = scope or CacheScope()
     feats = scope.persist(toks_df.select(
         "id",
         "__t",
@@ -1622,4 +1621,4 @@ def dsir_importance(
         )
         .withColumnRenamed("id", id_col)
     )
-    return attach(out, scope, created)
+    return out

@@ -22,7 +22,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from dwh_with_dask_spark.operators.caching import CacheScope, attach, scoped
+from dwh_with_dask_spark.operators.caching import CacheScope
 from dwh_with_dask_spark.operators.partitioning import barrier, widen
 
 #: auto-dispatch decisions, with the measured quantities behind them
@@ -271,7 +271,7 @@ def tfidf_cosine_pairs(
       construction → blocked; otherwise index. MEASURED at sf0.1
       (driver corpus: 31-token vocabulary, df ≈ 3.7k, sum(df²) =
       4.5e8 vs n² = 2.5e7): index 40.1 s → blocked 1.9 s, identical
-      output rows (scripts/exp_r15_tfidf_blocked.py).
+      output rows (round 15, sf0.1 and sf0.01).
 
     ``max_token_df`` drops tokens in more than that many docs before
     the pair stage (IDF down-weights them anyway, so the cap costs
@@ -309,7 +309,7 @@ def tfidf_cosine_pairs(
             f"strategy='blocked' requires an integral id column, got "
             f"{id_col}: {id_type} (use 'index' or 'auto')"
         )
-    scope, created = scoped(scope)
+    scope = scope or CacheScope()
     toks_df = widen(
         df.select(
             F.col(id_col).alias("id"), text_tokens(text_col).alias("__toks")
@@ -402,7 +402,7 @@ def tfidf_cosine_pairs(
         )
         .filter(F.col("cosine") >= threshold)
     )
-    return attach(out, scope, created)
+    return out
 
 
 #: per-task memory budget for one blocked-GEMM dense block-pair
@@ -600,7 +600,7 @@ def shingle_pairs(
         raise ValueError(
             f"max_shingle_freq requires strategy='naive', got {strategy!r}"
         )
-    scope, created = scoped(scope)
+    scope = scope or CacheScope()
     if strategy == "auto":
         stats = shingle_df_stats(df, id_col, text_col, n, scope=scope)
         choice = choose_pair_strategy(stats, naive_budget)
@@ -641,7 +641,7 @@ def shingle_pairs(
         .filter(F.col(kind) >= F.lit(threshold))
         .select("id_a", "id_b", "n_common", "n_a", "n_b", kind)
     )
-    return attach(out, scope, created)
+    return out
 
 
 def _naive_pair_counts(
@@ -836,7 +836,7 @@ def shingle_df_stats(
                                   # naive plan's shingle self-join
          capped_volume: {cap: sum(df^2 | df <= cap), ...}}
     """
-    scope, _created = scoped(scope)
+    scope = scope or CacheScope()
     sh = scope.persist(_doc_shingles(df, id_col, text_col, n))
     dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     d = F.col("df")
@@ -1077,7 +1077,7 @@ def minhash_lsh_pairs(
     if num_hashes % bands:
         raise ValueError("num_hashes must be divisible by bands")
     r = num_hashes // bands
-    scope, created = scoped(scope)
+    scope = scope or CacheScope()
     sigs = scope.persist(
         minhash_signatures(df, id_col, text_col, n, num_hashes, hash_family)
     )
@@ -1114,7 +1114,7 @@ def minhash_lsh_pairs(
         .filter(F.col("est_jaccard") >= F.lit(threshold))
         .select("id_a", "id_b", "est_jaccard")
     )
-    return attach(out, scope, created)
+    return out
 
 
 def simhash(
@@ -1512,7 +1512,7 @@ def incremental_dedup(
     """
     if num_hashes % bands:
         raise ValueError("num_hashes must be divisible by bands")
-    scope, created = scoped(scope)
+    scope = scope or CacheScope()
 
     batch_hash = new_df.select(
         F.col(id_col).alias("id"),
@@ -1572,7 +1572,7 @@ def incremental_dedup(
             F.col("exact_dup_of").isNull() & F.col("near_dup_of").isNull(),
         )
     )
-    return attach(out, scope, created)
+    return out
 
 
 def minhash_signatures_rowlocal(

@@ -173,12 +173,12 @@ def cuped_welch_report(
     cost (measured round 10: the sf10 driver row read 2.66× of its
     DuckDB oracle unshared). ``scope`` follows the repo's
     caller-owned-cache contract (operators.caching): pass a
-    ``CacheScope`` to control release, or release via
-    ``release_caches`` on the returned frame.
+    ``CacheScope`` to control release; without one the persist stays
+    until ``spark.catalog.clearCache()``.
     """
-    from dwh_with_dask_spark.operators.caching import attach, scoped
+    from dwh_with_dask_spark.operators.caching import CacheScope
 
-    scope, created = scoped(scope)
+    scope = scope or CacheScope()
     d = metric_decimals
     y_dec = F.col(metric_col).cast(f"decimal(25,{d})")
     x_dec = F.col(covariate_col).cast(f"decimal(25,{d})")
@@ -283,7 +283,7 @@ def cuped_welch_report(
     # Both report rows explode out of the SAME 1-row aggregate — a
     # union of two selects would recompute the whole pipeline (theta
     # pass included) once per branch.
-    return attach(agg.select(
+    return agg.select(
         F.explode(
             F.array(
                 row(
@@ -296,7 +296,7 @@ def cuped_welch_report(
                 ),
             )
         ).alias("__r")
-    ).select("__r.*"), scope, created)
+    ).select("__r.*")
 
 
 def mann_whitney_u(

@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from dwh_with_dask_spark.operators.caching import CacheScope, attach, scoped
+from dwh_with_dask_spark.operators.caching import CacheScope
 
 
 #: broadcast the node-sized rank/contribution frames into the
@@ -56,7 +56,7 @@ def pagerank(
     mass is dropped (the (1-d)/N floor still applies), matching the
     oracle twin exactly.
     """
-    scope, created = scoped(scope)
+    scope = scope or CacheScope()
     spark = edges.sparkSession
     reliable = spark.sparkContext._jsc.sc().getCheckpointDir().isDefined()
 
@@ -122,7 +122,7 @@ def pagerank(
             )
         )
 
-    return attach(ranks, scope, created)
+    return ranks
 
 
 def _canonical_edges(
@@ -196,7 +196,7 @@ def triangle_count(
     # DERIVATION (often itself a join, e.g. the co-occurrence basket
     # self-join) would run three times — measured 6 scans / 0 reuses on
     # the part graph. Lifecycle: caller-owned via ``scope``.
-    scope, created = scoped(scope)
+    scope = scope or CacheScope()
     e = scope.persist(_canonical_edges(edges, src, dst, min_count))
     tris = _closed_wedges(e)
     if per_node:
@@ -211,7 +211,7 @@ def triangle_count(
         )
     else:
         out = tris.agg(F.count(F.lit(1)).alias("n_triangles"))
-    return attach(out, scope, created)
+    return out
 
 
 def _closed_wedges(e: DataFrame) -> DataFrame:
@@ -268,7 +268,7 @@ def link_prediction(
     """
     if method not in ("common_neighbors", "ra", "adamic_adar"):
         raise ValueError(f"unknown link_prediction method {method!r}")
-    scope, created = scoped(scope)
+    scope = scope or CacheScope()
     e = scope.persist(_canonical_edges(edges, src, dst, min_count))
     adj = e.select(F.col("lo").alias("node"), F.col("hi").alias("nbr")).unionByName(
         e.select(F.col("hi").alias("node"), F.col("lo").alias("nbr"))
@@ -306,7 +306,7 @@ def link_prediction(
     out = per_b.groupBy("node_a", "node_b").agg(
         F.count(F.lit(1)).alias("n_common"), score.alias("score")
     )
-    return attach(out, scope, created)
+    return out
 
 
 def clustering_coefficient(
@@ -336,7 +336,7 @@ def clustering_coefficient(
     persist is what keeps the edge derivation from running four times);
     ``min_count`` is the same density guard.
     """
-    scope, created = scoped(scope)
+    scope = scope or CacheScope()
     e = scope.persist(_canonical_edges(edges, src, dst, min_count))
     deg = (
         e.select(F.col("lo").alias("node"))
@@ -362,4 +362,4 @@ def clustering_coefficient(
         .otherwise(F.lit(0.0))
         .alias("clustering_coeff"),
     )
-    return attach(out, scope, created)
+    return out

@@ -4,17 +4,16 @@ The reference assigns contiguous 1-based IDs in concatenation order
 (project-dask.py:46-48, dask-with-dataframe.py:84-87,
 dask-with-dataframe-[2].py:202). That is trivial single-machine but a
 scale hazard: a gap-free global sequence forces a total order. This
-module offers both semantics and documents the cost so callers choose
-deliberately:
+module offers two implementations and documents the cost so callers
+choose deliberately:
 
-- ``sequential_id``  — exact reference semantics (contiguous from 1 in a
-  caller-specified order). Implemented with zipWithIndex-style two-pass
-  partition offsets, NOT a single-partition window: each partition is
-  counted, offsets are prefix-summed on the driver (tiny), and IDs are
-  assigned partition-locally. Scales to any size as long as the input
+- ``sequential_id``        — zipWithIndex-style two-pass partition
+  offsets, NOT a single-partition window: each partition is counted,
+  offsets are prefix-summed on the driver (tiny), and IDs are assigned
+  partition-locally. Scales to any size as long as the input
   partitioning realizes the desired order (sort first if needed).
-- ``fast_id``        — monotonically_increasing_id: unique, ordered per
-  partition, NON-contiguous. Zero coordination; the 100 TB default.
+- ``sequential_id_window`` — one global ``row_number`` window: simple,
+  single-task, for dimension-sized data.
 """
 
 from __future__ import annotations
@@ -23,37 +22,34 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from dwh_with_dask_spark.operators.caching import CacheScope, attach, scoped
-
-
-def fast_id(df: DataFrame, name: str = "ID") -> DataFrame:
-    """Unique non-contiguous 64-bit IDs, no shuffle, no coordination."""
-    return df.withColumn(name, F.monotonically_increasing_id())
-
 
 def sequential_id(
     df: DataFrame,
     order_by: list[Column | str] | None = None,
     name: str = "ID",
     start: int = 1,
-    scope: CacheScope | None = None,
-    checkpoint: bool = False,
-    with_count: bool = False,
     keep: list[str] | None = None,
     checkpoint_level: "StorageLevel | None" = None,
-) -> DataFrame:
+) -> tuple[DataFrame, int, list[tuple[int, int]]]:
     """Gap-free IDs ``start, start+1, ...`` in ``order_by`` order.
 
+    Returns ``(frame, n_rows, bounds)``:
+
+    - ``frame`` is the input with the ID column ``name`` added;
+    - ``n_rows`` is the total row count;
+    - ``bounds`` lists each non-empty partition's ``(lo, hi)`` ID range
+      in partition-id order; that partition of ``frame`` holds exactly
+      the IDs ``lo..hi``.
+
+    ``n_rows`` and ``bounds`` come free from the per-partition stats this
+    function collects to assign offsets, so callers that need them (the
+    suffix module's dense-rank group counts and adjacency stitch) never
+    schedule a separate ``count()`` or bounds aggregate.
+
     ``keep`` (optional) projects to those columns right after the sort,
-    before anything is persisted — for callers whose sort key is wide
+    before anything is stored — for callers whose sort key is wide
     (e.g. the suffix module's 256-byte packed-prefix arrays) and not
     needed downstream: the sort sees it, the stored bytes don't.
-
-    ``with_count=True`` returns ``(frame, n_rows)`` instead — the total
-    comes free from the per-partition stats this function already
-    collects to assign offsets, so callers that need the row count
-    (e.g. the suffix module's dense-rank group counts) never schedule a
-    separate ``count()`` job.
 
     When ``order_by`` is given the input is range-partition sorted on it
     first (one shuffle), so the global sequence follows that order across
@@ -64,73 +60,42 @@ def sequential_id(
        (``mid`` is consecutive within a partition: partition id in the
        upper bits, a per-partition record counter in the lower 33 — the
        documented layout of the Catalyst expression);
-    2. persist the stamped frame, then run ONE tiny aggregation job —
-       ``groupBy(pid).agg(count, min(mid))`` — collecting one row per
-       partition (thousands of rows, never data). The persist pins the
-       stamp so the count job and the final plan see identical
-       partition/row assignments even if upstream shuffles would
-       otherwise resample range boundaries between jobs;
+    2. eagerly ``localCheckpoint`` the stamped frame (at
+       ``checkpoint_level``, Spark's default when None), then run ONE tiny
+       aggregation job — ``groupBy(pid).agg(count, min(mid))`` —
+       collecting one row per partition (thousands of rows, never data).
+       The checkpoint pins the nondeterministic stamp, so the count job
+       and every later action see identical partition/row assignments,
+       and truncates the lineage, so nothing can ever recompute it;
     3. prefix-sum the counts on the driver and broadcast-join the
        per-partition offsets back on ``pid`` (broadcast of ~#partitions
-       rows — narrow, no data movement);
+       rows — narrow, no data movement, cheap to replay per action);
     4. ``ID = start + offset[pid] + (mid - min_mid[pid])`` — pure column
        arithmetic, whole-stage codegen, no window, no Python.
 
     This is the distributed equivalent of the reference's
     ``range(1, len+1)`` (project-dask.py:46-48) without collapsing to one
-    partition. The one materialization pass (persist, MEMORY_AND_DISK) is
-    the price of cross-job determinism — the same cost profile as RDD
-    ``zipWithIndex``, minus its Python round-trip. Lifecycle: pass a
-    ``CacheScope`` (operators.caching) and release it after the final
-    action; without one, a private scope rides on the result as
-    ``result.cache_scope``.
-
-    .. warning:: Unlike pure-transform operators, a ``sequential_id``
-       result must NOT be re-actioned after its scope is released. The
-       offsets were collected from the first materialization of the
-       nondeterministic ``__mid`` stamp; once the cache is dropped, a new
-       action recomputes ``__mid`` under possibly different partitioning
-       and the stale offsets would yield wrong or non-contiguous IDs.
-       Pass ``checkpoint=True`` if you need to act on the result after
-       release — it eagerly materializes the STAMPED frame via
-       ``localCheckpoint`` and TRUNCATES the lineage, so nothing can
-       ever recompute the stamp; the returned frame is the pinned
-       stamp plus a deterministic broadcast join of ~#partitions
-       offset rows (replayed per action — storing the joined result
-       again would double the frame's block storage for nothing). (The
-       checkpoint blocks themselves are Spark-managed and reclaimed by
-       the ContextCleaner when the result is garbage collected; for a
-       result that must survive executor loss, write it to a table
-       instead.)
+    partition. The one materialization pass is the price of cross-job
+    determinism — the same cost profile as RDD ``zipWithIndex``, minus
+    its Python round-trip. The checkpoint blocks are Spark-managed and
+    reclaimed by the ContextCleaner when the result is garbage
+    collected; for a result that must survive executor loss, write it
+    to a table instead.
     """
     if order_by:
         df = df.orderBy(*order_by)
     if keep is not None:
         # post-sort projection: drop columns (e.g. a wide sort key) the
-        # caller no longer needs BEFORE the stamp is persisted and the
-        # result checkpointed — the sort itself still sees them, the
-        # stored bytes don't. Projection preserves ordering/partitioning.
+        # caller no longer needs BEFORE the stamp is checkpointed — the
+        # sort itself still sees them, the stored bytes don't.
+        # Projection preserves ordering/partitioning.
         df = df.select(*keep)
 
-    stamped = df.withColumn("__pid", F.spark_partition_id()).withColumn(
-        "__mid", F.monotonically_increasing_id()
+    stamped = (
+        df.withColumn("__pid", F.spark_partition_id())
+        .withColumn("__mid", F.monotonically_increasing_id())
+        .localCheckpoint(eager=True, storageLevel=checkpoint_level)
     )
-    if checkpoint:
-        # checkpoint the STAMPED frame (not the assigned result): the
-        # checkpoint both pins the nondeterministic stamp across jobs
-        # (the role the persist plays on the scope path) and truncates
-        # the lineage — the offsets join below is a deterministic
-        # broadcast over ~#partitions rows, cheap to replay per action,
-        # so materializing the joined result again would store the
-        # whole frame twice for nothing.
-        stamped = stamped.localCheckpoint(
-            eager=True, storageLevel=checkpoint_level
-        )
-        scope, created = None, False
-    else:
-        scope, created = scoped(scope)
-        stamped = scope.persist(stamped)
-
     part_stats = (
         stamped.groupBy("__pid")
         .agg(F.count(F.lit(1)).alias("__n"), F.min("__mid").alias("__minmid"))
@@ -138,8 +103,10 @@ def sequential_id(
     )
     running = 0
     offsets = []
+    bounds = []
     for r in sorted(part_stats, key=lambda r: r["__pid"]):
         offsets.append((r["__pid"], running, r["__minmid"]))
+        bounds.append((start + running, start + running + r["__n"] - 1))
         running += r["__n"]
 
     spark = df.sparkSession
@@ -156,23 +123,7 @@ def sequential_id(
         )
         .drop("__pid", "__mid", "__off", "__minmid")
     )
-    # Per-partition ID bounds ride on the result (round 16): partition
-    # ``pid`` holds exactly IDs [start+off, start+off+n) — already known
-    # from the stats collect above, so callers that need partition
-    # boundaries in ID space (the suffix module's adjacency stitch)
-    # never schedule their own full-scan bounds aggregate. Same
-    # rides-on-the-frame convention as caching's cache_scope.
-    out._sid_bounds = {
-        pid: (start + off, start + off + n - 1)
-        for (pid, off, _minmid), n in zip(
-            offsets, (r["__n"] for r in sorted(part_stats, key=lambda r: r["__pid"]))
-        )
-        if n > 0
-    }
-    if checkpoint:
-        return (out, running) if with_count else out
-    out = attach(out, scope, created)
-    return (out, running) if with_count else out
+    return out, running, bounds
 
 
 def sequential_id_window(

@@ -206,7 +206,7 @@ def phash_dihedral_near_dup_pairs(
     pair the pigeonhole argument is unchanged (distance ≤ max_hamming
     < bands forces an agreeing block), so every true pair is found.
     """
-    from dwh_with_dask_spark.operators.caching import attach, scoped
+    from dwh_with_dask_spark.operators.caching import CacheScope
 
     if max_hamming >= bands:
         raise ValueError("completeness requires max_hamming < bands")
@@ -215,7 +215,7 @@ def phash_dihedral_near_dup_pairs(
     # Persisted: the hash table feeds BOTH join sides — without it each
     # side re-decodes every image. Lifecycle: caller-owned via ``scope``
     # (operators.caching), released after the final action.
-    scope, created = scoped(scope)
+    scope = scope or CacheScope()
     hashes = scope.persist(image_perceptual_hashes(media))
     orients = hashes.select(
         F.col("content_hash").alias("id"),
@@ -275,4 +275,4 @@ def phash_dihedral_near_dup_pairs(
         .agg(F.min("__h").alias("hamming"))
         .filter(F.col("hamming") <= max_hamming)
     )
-    return attach(out, scope, created)
+    return out

@@ -130,7 +130,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 from pyspark.storagelevel import StorageLevel
 
-from dwh_with_dask_spark.operators.caching import CacheScope, attach, scoped
+from dwh_with_dask_spark.operators.caching import CacheScope
 from dwh_with_dask_spark.operators.dedup import text_tokens
 from dwh_with_dask_spark.operators.ids import sequential_id
 from dwh_with_dask_spark.operators.partitioning import barrier, widen
@@ -227,13 +227,11 @@ def _dense_rank_distributed(
     free from ``sequential_id``'s own per-partition stats (no separate
     count job), and when it is small the join back is a broadcast (the
     token-vocabulary case: the N-row positions table never shuffles)."""
-    keys, n = sequential_id(
+    keys, n, _bounds = sequential_id(
         df.select(*key_cols).distinct(),
         order_by=[F.col(c).asc() for c in key_cols],
         name=out,
         start=0,
-        checkpoint=True,
-        with_count=True,
     )
     if n <= _KEYS_BROADCAST_MAX:
         keys = F.broadcast(keys)
@@ -406,15 +404,13 @@ def suffix_ranks(
     while True:
         si += 1
         uname = f"u{si}"
-        seq, _n = sequential_id(
+        seq, _n, _bounds = sequential_id(
             pos.withColumn("__h1", F.xxhash64(keyc)).withColumn(
                 "__h2", F.xxhash64(F.lit(1), keyc)
             ),
             order_by=[F.col(keyc).asc()],
             name="__rn",
             start=0,
-            checkpoint=True,
-            with_count=True,
             checkpoint_level=_CKPT_LEVEL,
             # the wide xs is dropped right after its one sort; an
             # intermediate round's array column rides the round's own
@@ -496,7 +492,6 @@ def longest_repeats(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    scope: CacheScope | None = None,
     min_rep: int | None = None,
 ) -> DataFrame:
     """(id, pos, dl, rep): for every token position, the EXACT length of
@@ -515,8 +510,7 @@ def longest_repeats(
     surviving pair set instead of the corpus-sized full one. Exact for
     any consumer that filters rep >= min_rep (both span operators do).
     """
-    scope, created = scoped(scope)
-    sa, pairs = _sa_pairs(df, text_col, id_col, scope, min_rep=min_rep)
+    sa, pairs, n_sa = _sa_pairs(df, text_col, id_col, min_rep=min_rep)
     # rep = max(LCP with predecessor, LCP with successor). Each pair
     # contributes its lcp to BOTH members, and the pair row already
     # carries both members' (id, pos, dl) — so explode to two
@@ -536,7 +530,7 @@ def longest_repeats(
         .groupBy("m.id", "m.pos", "m.dl")
         .agg(F.max("lcp").alias("rep"))
     )
-    if getattr(sa, "_sa_count", None) == 1:
+    if n_sa == 1:
         rep = sa.select(
             "id", "pos", "dl", F.lit(0).cast("long").alias("rep")
         )
@@ -547,7 +541,7 @@ def longest_repeats(
         # override's rep=0 row honors the omitted-below-threshold
         # contract too (ADVICE r12).
         rep = rep.filter(F.col("rep") >= min_rep)
-    return attach(rep, scope, created)
+    return rep
 
 
 def suffix_duplicate_spans(
@@ -555,7 +549,6 @@ def suffix_duplicate_spans(
     text_col: str = "text",
     id_col: str = "doc_id",
     min_len: int = 8,
-    scope: CacheScope | None = None,
 ) -> DataFrame:
     """Variable-length ExactSubstr coverage: per document, the token
     positions covered by SOME duplicated substring of length >=
@@ -571,7 +564,7 @@ def suffix_duplicate_spans(
     the quantity the fixed-k scheme cannot report — at
     O(log max_len)-shuffle cost instead of one."""
     rep = longest_repeats(
-        df, text_col=text_col, id_col=id_col, scope=scope, min_rep=min_len
+        df, text_col=text_col, id_col=id_col, min_rep=min_len
     )
     spans = rep.filter(F.col("rep") >= min_len)
     # one parsed expression (round 16, py4j construction cost — see
@@ -806,15 +799,16 @@ def _sa_pairs(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    scope: CacheScope,
     min_rep: int | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """(sa, pairs): ``sa`` = every position with its suffix-array index
-    ``__sa`` (order: top-level key, ties — equal complete suffixes —
-    on (id, pos)); ``pairs`` = one row per ADJACENT sa pair
+) -> tuple[DataFrame, DataFrame, int]:
+    """(sa, pairs, n_sa): ``sa`` = every position with its suffix-array
+    index ``__sa`` (order: top-level key, ties — equal complete
+    suffixes — on (id, pos)); ``pairs`` = one row per ADJACENT sa pair
     (ida, posa, dla, idb, posb, dlb, __i, lcp) where ``__i`` is the
-    successor's sa index and ``lcp`` the pair's exact LCP. The shared
-    core of ``longest_repeats`` and ``suffix_span_removal``.
+    successor's sa index and ``lcp`` the pair's exact LCP; ``n_sa`` =
+    the number of positions (free from ``sequential_id``; it drives
+    ``longest_repeats``' one-position-corpus guard). The shared core of
+    ``longest_repeats`` and ``suffix_span_removal``.
 
     ``min_rep`` (optional) is the consumers' threshold pushdown: pairs
     resolved by the carried tiers with lcp < min_rep are dropped
@@ -878,19 +872,13 @@ def _sa_pairs(
     base = R0 * L
     top = "atop" if has_tail else "xs"
     pair_carry = ["x0", "atop"] if has_tail else ["xs"]
-    sa, n_sa = sequential_id(
+    sa, n_sa, bounds = sequential_id(
         pos,
         order_by=[F.col(top).asc(), F.col("id").asc(), F.col("pos").asc()],
         name="__sa",
         start=0,
-        checkpoint=True,
-        with_count=True,
         checkpoint_level=_CKPT_LEVEL,
     )
-    # ride the (free) position count along for longest_repeats'
-    # one-position-corpus guard — same rides-on-the-frame convention
-    # as caching's cache_scope attribute
-    sa._sa_count = n_sa
     t = _mark("sa order+seq_id", t)
 
     # ADJACENT pairs via lead() within the checkpointed sort partitions
@@ -906,11 +894,9 @@ def _sa_pairs(
     # broadcast-join to the last-rows on successor arithmetic.
     sa2 = sa.withColumn("__pid", F.spark_partition_id())
     # partition bounds in __sa space come FREE from sequential_id's own
-    # per-partition stats (round 16: ids.py attaches them as
-    # _sid_bounds) — the previous full-scan groupBy(__pid).agg(min,max)
-    # collect job is gone. Values are identical: partition pid holds
-    # exactly the contiguous __sa range the offsets prefix-sum assigned.
-    bounds = list(sa._sid_bounds.values())
+    # per-partition stats — no full-scan groupBy(__pid).agg(min,max)
+    # collect job: partition pid holds exactly the contiguous __sa
+    # range the offsets prefix-sum assigned.
     last_sas = [hi for _, hi in bounds if hi < n_sa - 1]
     first_sas = [lo for lo, _ in bounds if lo > 0]
     # The lead window clusters by __pid — P distinct keys into P hash
@@ -1100,7 +1086,7 @@ def _sa_pairs(
             F.col("dlb") - F.col("posb"),
         ),
     )
-    return sa, pairs
+    return sa, pairs, n_sa
 
 
 def _running_sum_by_order(
@@ -1191,8 +1177,8 @@ def suffix_span_removal(
     cover non-default min_len and the block-rank tail path."""
     from dwh_with_dask_spark.operators.dedup import _reassemble_after_cuts
 
-    scope, created = scoped(scope)
-    sa, pairs = _sa_pairs(df, text_col, id_col, scope, min_rep=min_len)
+    scope = scope or CacheScope()
+    _, pairs, _ = _sa_pairs(df, text_col, id_col, min_rep=min_len)
     # Per-row (rep, lcp_prev) from ONE exploded aggregate — no sa
     # self-joins: each adjacent pair carries both members' identities,
     # contributes its lcp to both members' rep, and IS the successor
@@ -1310,8 +1296,7 @@ def suffix_span_removal(
             )
         )
     )
-    out = _reassemble_after_cuts(df, ivals, text_col, id_col, min_len)
-    return attach(out, scope, created)
+    return _reassemble_after_cuts(df, ivals, text_col, id_col, min_len)
 
 
 def _colliding_closure(

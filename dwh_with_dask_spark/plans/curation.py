@@ -1215,9 +1215,7 @@ def curation_dsir_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents")
     out = dsir_resample(d, F.col("lang") == "en", k=120)
-    res = out.select("doc_id", "lang", "dsir_logw")
-    res.cache_scope = getattr(out, "cache_scope", None)
-    return res
+    return out.select("doc_id", "lang", "dsir_logw")
 
 
 @query(

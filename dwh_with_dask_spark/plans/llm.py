@@ -612,22 +612,14 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") % 2 == 0)
     batch = docs.filter(F.col("doc_id") % 2 == 1)
-    scope = CacheScope()
     # Persist the index: in production it is a STORED parquet table;
     # passing the live corpus_index plan un-materialized makes
     # incremental_dedup's three index consumers (exact-hash join,
     # band buckets, signature verify) re-run the corpus MinHash
     # pipeline three times (measured 27 s -> single-digit at sf1).
-    index = scope.persist(D.corpus_index(corpus, hash_family="md5"))
-    out = D.incremental_dedup(
-        batch, index, threshold=0.5, scope=scope, hash_family="md5"
-    )
-    res = out.select("doc_id", "exact_dup_of", "near_dup_of", "is_new")
-    # select() returns a NEW DataFrame without the scope attribute —
-    # re-attach so release_caches(result) frees the persisted index and
-    # batch signatures (otherwise they leak per invocation).
-    res.cache_scope = scope
-    return res
+    index = CacheScope().persist(D.corpus_index(corpus, hash_family="md5"))
+    out = D.incremental_dedup(batch, index, threshold=0.5, hash_family="md5")
+    return out.select("doc_id", "exact_dup_of", "near_dup_of", "is_new")
 
 
 # DuckDB twin of dedup.simhash's md5 family: identical 60-bit token
@@ -1539,7 +1531,7 @@ def quality_classifier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass. Rows-only (iterative float fit); the GD twin is pinned in
     tests/test_analytics.py."""
     from dwh_with_dask_spark.operators import textstats as TS
-    from dwh_with_dask_spark.operators.caching import CacheScope, attach
+    from dwh_with_dask_spark.operators.caching import CacheScope
     from dwh_with_dask_spark.operators.pca import logreg_fit
 
     d = load_table(spark, sf_dir, "documents")
@@ -1557,8 +1549,7 @@ def quality_classifier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the 30 GD scans re-read ONLY this doc_id + 4-doubles table, never
     # the text: tokenize runs once into the cache, not once per pass
-    scope = CacheScope()
-    feats = scope.persist(feats)
+    feats = CacheScope().persist(feats)
     w, b, _, _ = logreg_fit(feats, "f", "y", iters=30, lr=1.0, l2=1e-4)
     warr = F.array(*[F.lit(float(x)) for x in w])
     z = F.aggregate(
@@ -1566,14 +1557,10 @@ def quality_classifier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0.0),
         lambda acc, x: acc + x,
     ) + F.lit(float(b))
-    return attach(
-        feats.select(
-            "doc_id",
-            "y",
-            F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 6).alias("score"),
-        ),
-        scope,
-        True,
+    return feats.select(
+        "doc_id",
+        "y",
+        F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 6).alias("score"),
     )
 
 
@@ -1611,17 +1598,15 @@ def dedup_incremental_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/dedup.py:build_span_index / incremental_duplicate_spans).
     Exact: identical output to the full-corpus recompute restricted to
     batch docs (oracle + equivalence test)."""
-    from dwh_with_dask_spark.operators.caching import CacheScope, attach
+    from dwh_with_dask_spark.operators.caching import CacheScope
 
     docs = load_table(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") % 2 == 0)
     batch = docs.filter(F.col("doc_id") % 2 == 1)
-    scope = CacheScope()
     # stored-table stand-in: without the persist, the semi-join and any
     # re-action would re-shingle the corpus per consumer
-    index = scope.persist(D.build_span_index(corpus))
-    out = D.incremental_duplicate_spans(batch, index)
-    return attach(out, scope, True)
+    index = CacheScope().persist(D.build_span_index(corpus))
+    return D.incremental_duplicate_spans(batch, index)
 
 
 # Span-removal CTE chain shared by dedup_span_removal and the composed
@@ -1835,7 +1820,7 @@ def dedup_suffix_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     shares a >= 8-token window with it, so the closure reproduces run
     segmentation, the corpus-wide-first canonical, and every exact cut
     extent of the full pass."""
-    from dwh_with_dask_spark.operators.caching import CacheScope, attach
+    from dwh_with_dask_spark.operators.caching import CacheScope
     from dwh_with_dask_spark.operators.suffix import (
         suffix_removal_incremental,
     )
@@ -1843,11 +1828,9 @@ def dedup_suffix_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") % 2 == 0)
     batch = docs.filter(F.col("doc_id") % 2 == 1)
-    scope = CacheScope()
     # stored-table stand-in (same convention as dedup_incremental_spans)
-    index = scope.persist(D.build_span_doc_index(corpus))
-    out = suffix_removal_incremental(batch, corpus, index)
-    return attach(out, scope, True)
+    index = CacheScope().persist(D.build_span_doc_index(corpus))
+    return suffix_removal_incremental(batch, corpus, index)
 
 
 @query(
@@ -2043,13 +2026,10 @@ def corpus_prepare_pipeline_v4(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplicate-sized pair set, one-scan repetition profile, stateless
     md5 split) — no new shuffles beyond what the parts pay."""
     from dwh_with_dask_spark.operators import curation as C
-    from dwh_with_dask_spark.operators.caching import CacheScope, attach
 
     docs = load_table(spark, sf_dir, "documents")
-    scope = CacheScope()
     pairs = D.minhash_lsh_pairs(
-        docs, n=3, num_hashes=64, bands=16, threshold=0.5,
-        hash_family="md5", scope=scope,
+        docs, n=3, num_hashes=64, bands=16, threshold=0.5, hash_family="md5"
     ).select("id_a", "id_b")
     comp = D.dedup_components(docs, pairs)
     keepers = docs.join(
@@ -2058,12 +2038,11 @@ def corpus_prepare_pipeline_v4(spark: SparkSession, sf_dir: str) -> DataFrame:
     gated = TS.repetition_filter(
         keepers, max_top_bigram_frac=0.18, min_distinct_ratio=0.20
     )
-    out = gated.select(
+    return gated.select(
         "doc_id",
         TS.token_count(F.col("text")).alias("n_tokens"),
         C.hash_split("doc_id", 0.90, 0.05).alias("split"),
     )
-    return attach(out, scope, True)
 
 
 @query(

@@ -23,7 +23,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import HEADLINE, jvm_gc, materialize  # noqa: E402
-from dwh_with_dask_spark.operators.caching import release_caches  # noqa: E402
 from dwh_with_dask_spark.plans import QUERIES  # noqa: E402
 from dwh_with_dask_spark.session import get_spark  # noqa: E402
 
@@ -51,17 +50,15 @@ def main() -> None:
         fn = QUERIES[name]
         spark.sparkContext.setJobDescription(f"registry:{name}")
         try:
-            out = fn(spark, sf_dir)
-            materialize(out)  # warmup
-            release_caches(out)
+            materialize(fn(spark, sf_dir))  # warmup
+            spark.catalog.clearCache()
             jvm_gc(spark)
             runs = []
             for _ in range(args.runs):
                 t0 = time.perf_counter()
-                out = fn(spark, sf_dir)
-                materialize(out)
+                materialize(fn(spark, sf_dir))
                 runs.append(time.perf_counter() - t0)
-                release_caches(out)
+                spark.catalog.clearCache()
             results[name] = {
                 "median": round(statistics.median(runs), 3),
                 "min": round(min(runs), 3),

@@ -29,7 +29,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod
 from bench import HEADLINE, anchor_sec, jvm_gc, loadavg, materialize
-from dwh_with_dask_spark.operators.caching import release_caches
 from dwh_with_dask_spark.session import get_spark
 from tests.conftest import make_duck
 
@@ -44,14 +43,13 @@ SLOW_CUTOFF_SEC = 60.0  # one timed run is honest enough past this
 
 
 def _run_once(spark, fn, sf_dir: str) -> float:
-    """One timed materialization; frees any operator-private cache scope
-    the query attached (e.g. incremental dedup's persisted batch
-    signatures) so repeated trials don't accumulate cached tables."""
+    """One timed materialization; clears the session cache afterwards
+    (e.g. incremental dedup's persisted batch signatures) so repeated
+    trials neither accumulate nor reuse cached tables."""
     t0 = time.perf_counter()
-    df = fn(spark, sf_dir)
-    materialize(df)
+    materialize(fn(spark, sf_dir))
     dt = time.perf_counter() - t0
-    release_caches(df)
+    spark.catalog.clearCache()
     return dt
 
 
@@ -314,10 +312,9 @@ def main() -> None:
 
         SX.TIMINGS = []
         t0 = time.perf_counter()
-        df = fn(spark, SF1_DIR)
-        materialize(df)
+        materialize(fn(spark, SF1_DIR))
         v3_total = time.perf_counter() - t0
-        release_caches(df)
+        spark.catalog.clearCache()
         phases = list(SX.TIMINGS)
         SX.TIMINGS = None
 
@@ -328,7 +325,7 @@ def main() -> None:
             sdf = fn(spark, sf_dir)
             srows = [tuple(r) for r in sdf.collect()]
             scols = list(sdf.columns)
-            release_caches(sdf)
+            spark.catalog.clearCache()
             rel = con.sql(oracles[name])
             dcols = [d[0] for d in rel.description]
             drows = rel.fetchall()

@@ -1,6 +1,6 @@
-"""Operator persist lifecycle: every operator that caches an internal
-intermediate must release it through CacheScope — nothing may stay
-pinned in the block manager after the caller is done.
+"""Operator persist lifecycle: an operator that caches an internal
+intermediate releases it through the caller's CacheScope; without a
+scope the entry belongs to the session until ``clearCache()``.
 
 Verification is via the JVM block manager itself
 (``sc._jsc.getPersistentRDDs()``), asserting on the DELTA of RDD ids
@@ -14,7 +14,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from dwh_with_dask_spark.operators.caching import CacheScope, release_caches
+from dwh_with_dask_spark.operators.caching import CacheScope
 from dwh_with_dask_spark.operators.curation import contamination_pairs
 from dwh_with_dask_spark.operators.dedup import minhash_lsh_pairs, shingle_pairs
 from dwh_with_dask_spark.operators.ids import sequential_id
@@ -59,26 +59,15 @@ def test_contamination_scope_releases(spark, docs):
     assert not (_persisted_ids(spark) & created)
 
 
-def test_sequential_id_scope_releases(spark, docs):
-    base = _persisted_ids(spark)
-    with CacheScope() as scope:
-        out = sequential_id(docs, order_by=["doc_id"], scope=scope)
-        ids = [r["ID"] for r in out.orderBy("doc_id").collect()]
-        assert ids == list(range(1, 41))  # contiguity unaffected by scoping
-        created = _persisted_ids(spark) - base
-        assert created
-    assert not (_persisted_ids(spark) & created)
-
-
 def test_sequential_id_checkpoint_safe_after_release(spark, docs):
-    # The documented hazard: re-actioning a sequential_id result after
-    # its scope is released can recompute the nondeterministic stamp
-    # against stale offsets. checkpoint=True truncates lineage eagerly,
-    # releases the internal stamp cache itself, and stays correct across
-    # arbitrarily many later actions.
-    out = sequential_id(docs, order_by=["doc_id"], checkpoint=True)
+    # Re-actioning a sequential_id result must never recompute the
+    # nondeterministic stamp against stale offsets: the stamp is
+    # checkpointed eagerly (lineage truncated), so the result stays
+    # correct across a session cache clear and any number of actions.
+    out, n, _bounds = sequential_id(docs, order_by=["doc_id"])
+    assert n == 40
     ids1 = [r["ID"] for r in out.orderBy("doc_id").collect()]
-    release_caches(out)  # no private scope attached: must be a no-op
+    spark.catalog.clearCache()
     ids2 = [r["ID"] for r in out.orderBy("doc_id").collect()]
     assert ids1 == ids2 == list(range(1, 41))
     # lineage is truncated: the plan no longer contains the
@@ -86,24 +75,12 @@ def test_sequential_id_checkpoint_safe_after_release(spark, docs):
     assert "monotonically" not in out._jdf.queryExecution().analyzed().toString()
 
 
-def test_private_scope_attached_and_releasable(spark, docs):
-    # No caller scope: the operator attaches its private scope to the
-    # result so release_caches() can free it after the final action.
-    base = _persisted_ids(spark)
-    pairs = shingle_pairs(docs, "jaccard", "naive", threshold=0.0)
-    pairs.count()
-    created = _persisted_ids(spark) - base
-    assert created
-    release_caches(pairs)
-    assert not (_persisted_ids(spark) & created)
-
-
 def test_released_result_still_correct(spark, docs):
     # Unpersist drops the cache, not the plan: a post-release action
     # recomputes and must return identical results. (This recompute-after-
     # release pattern is safe for pure-transform operators like the
-    # Jaccard pairs; sequential_id explicitly forbids it — see its
-    # docstring warning about the nondeterministic stamp.)
+    # Jaccard pairs; sequential_id is safe for another reason — it
+    # checkpoints its nondeterministic stamp instead of persisting it.)
     with CacheScope() as scope:
         pairs = shingle_pairs(docs, "jaccard", "naive", threshold=0.0, scope=scope)
         before = pairs.count()
@@ -130,29 +107,69 @@ def test_shared_plan_single_cache_entry(spark, docs):
     assert not (plan.storageLevel.useMemory or plan.storageLevel.useDisk)
 
 
-def test_incremental_batch_plan_scope_releasable(spark):
-    # The registry's dedup_incremental_batch ends in a select(), which
-    # returns a NEW DataFrame — the plan must re-attach the operator's
-    # private scope so release_caches(result) frees the persisted batch
-    # signature table (regression: one leaked cache entry per call).
+def _unscoped_pairs(spark, docs):
+    return shingle_pairs(docs, "jaccard", "naive", threshold=0.0)
+
+
+def _unscoped_incremental_batch(spark, docs):
+    # The registry's dedup_incremental_batch ends in a select(); its
+    # persisted index and batch signatures must still be reachable by
+    # the session-wide release.
     from dwh_with_dask_spark.plans.llm import dedup_incremental_batch
     from tests.conftest import SF_SMOKE
 
-    base = _persisted_ids(spark)
-    out = dedup_incremental_batch(spark, SF_SMOKE)
-    # collect(), not count(): the flag columns come from left joins on
-    # grouped (unique) keys, so for a bare count Catalyst ELIMINATES
-    # both joins and the signature cache never materializes at all.
+    return dedup_incremental_batch(spark, SF_SMOKE)
+
+
+@pytest.mark.parametrize(
+    "build", [_unscoped_pairs, _unscoped_incremental_batch],
+    ids=["shingle_pairs", "dedup_incremental_batch"],
+)
+def test_unscoped_persist_lives_until_clear_cache(spark, docs, build):
+    # No caller scope: the operator's persists belong to the session.
+    # Dropping the result and collecting garbage on both sides does not
+    # free them (CacheManager holds its own reference); clearCache does.
+    import gc
+
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    assert cache_manager.isEmpty()
+    out = build(spark, docs)
+    # collect(), not count(): for a bare count Catalyst can eliminate
+    # the incremental plan's left joins on unique keys, and with them
+    # the cached signature table.
     out.collect()
-    created = _persisted_ids(spark) - base
-    assert created
-    assert isinstance(getattr(out, "cache_scope", None), CacheScope)
-    release_caches(out)
-    assert not (_persisted_ids(spark) & created)
+    assert not cache_manager.isEmpty()
+    del out
+    gc.collect()
+    spark.sparkContext._jvm.System.gc()
+    assert not cache_manager.isEmpty()
+    spark.catalog.clearCache()
+    assert cache_manager.isEmpty()
 
 
-def test_release_caches_ignores_column_named_cache_scope(spark):
-    # DataFrame.__getattr__ resolves unknown attributes as columns; a
-    # real column named cache_scope must not break release_caches.
-    df = spark.createDataFrame([(1, "x")], "id long, cache_scope string")
-    release_caches(df)  # must be a no-op, not an AttributeError on Column
+def test_sequential_id_degenerate_inputs(spark):
+    # n_rows and the per-partition bounds come back explicitly, also on
+    # the inputs with no rows, one row, and mostly empty partitions.
+    empty = spark.createDataFrame([], "v long")
+    out, n, bounds = sequential_id(empty, order_by=["v"])
+    assert (n, bounds, out.collect()) == (0, [], [])
+
+    one = spark.createDataFrame([(7,)], "v long")
+    out, n, bounds = sequential_id(one, order_by=["v"])
+    assert (n, bounds) == (1, [(1, 1)])
+    assert [r["ID"] for r in out.collect()] == [1]
+
+    sparse = spark.createDataFrame([(1,), (2,), (3,)], "v long").repartition(8)
+    out, n, bounds = sequential_id(sparse)
+    assert n == 3
+    assert sorted(r["ID"] for r in out.collect()) == [1, 2, 3]
+    # only non-empty partitions, in partition order, tiling 1..3
+    assert all(lo <= hi for lo, hi in bounds)
+    assert [i for lo, hi in bounds for i in range(lo, hi + 1)] == [1, 2, 3]
+    by_part = (
+        out.withColumn("p", F.spark_partition_id())
+        .groupBy("p").agg(F.min("ID").alias("lo"), F.max("ID").alias("hi"))
+        .orderBy("p").collect()
+    )
+    assert bounds == [(r["lo"], r["hi"]) for r in by_part]

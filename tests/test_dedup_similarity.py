@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from dwh_with_dask_spark.operators import dedup as D
+from dwh_with_dask_spark.operators.caching import CacheScope
 from dwh_with_dask_spark.operators import similarity as S
 from tests.conftest import SF_CORRECT
 
@@ -1364,6 +1365,16 @@ def _brute_longest_repeats(docs):
     return rep
 
 
+_REPEATS_DOCS = [
+    (1, "the quick brown fox jumps over the lazy dog"),
+    (2, "a quick brown fox ran away"),
+    (3, "over the lazy dog they jumped"),
+    (4, "completely unique tokens here zebra"),
+    (5, "the lazy dog"),          # equal complete suffix vs doc 1/3
+    (6, "echo echo echo echo"),   # within-doc variable repeat
+]
+
+
 def test_suffix_longest_repeats_match_bruteforce(spark):
     """The distributed prefix-doubling suffix array reports the EXACT
     longest-repeat length per position — verified against a quadratic
@@ -1372,14 +1383,7 @@ def test_suffix_longest_repeats_match_bruteforce(spark):
     clamp case), and a unique-token doc."""
     from dwh_with_dask_spark.operators.suffix import longest_repeats
 
-    docs = [
-        (1, "the quick brown fox jumps over the lazy dog"),
-        (2, "a quick brown fox ran away"),
-        (3, "over the lazy dog they jumped"),
-        (4, "completely unique tokens here zebra"),
-        (5, "the lazy dog"),          # equal complete suffix vs doc 1/3
-        (6, "echo echo echo echo"),   # within-doc variable repeat
-    ]
+    docs = _REPEATS_DOCS
     d = spark.createDataFrame(docs, "doc_id long, text string")
     got = {
         (r.id, r.pos): r.rep for r in longest_repeats(d).collect()
@@ -1395,6 +1399,33 @@ def test_suffix_longest_repeats_match_bruteforce(spark):
     assert all(
         v == 0 for (i, _), v in want.items() if i == 4
     )
+
+
+@pytest.mark.parametrize("broadcast_keys", [True, False], ids=["broadcast", "shuffle"])
+def test_suffix_distributed_dense_rank_matches_bruteforce(
+    spark, monkeypatch, broadcast_keys
+):
+    """The token dense rank's size gates forced past the driver budget:
+    ``_KEYS_DRIVER_MAX = 0`` sends every vocabulary through
+    ``_dense_rank_distributed`` (distinct -> range-sorted
+    ``sequential_id`` -> join back), and ``_KEYS_BROADCAST_MAX = 0``
+    turns that join back into a shuffle join. Both must keep the exact
+    brute-force longest repeats of the driver-side default."""
+    from dwh_with_dask_spark.operators import suffix as SX
+
+    monkeypatch.setattr(SX, "_KEYS_DRIVER_MAX", 0)
+    if not broadcast_keys:
+        monkeypatch.setattr(SX, "_KEYS_BROADCAST_MAX", 0)
+    calls = []
+    real = SX._dense_rank_distributed
+    monkeypatch.setattr(
+        SX, "_dense_rank_distributed",
+        lambda *a, **k: calls.append(a[1]) or real(*a, **k),
+    )
+    d = spark.createDataFrame(_REPEATS_DOCS, "doc_id long, text string")
+    got = {(r.id, r.pos): r.rep for r in SX.longest_repeats(d).collect()}
+    assert calls == [["__tok"]]  # the gate really sent the vocabulary there
+    assert got == _brute_longest_repeats(_REPEATS_DOCS)
 
 
 def test_suffix_spans_equal_fixed_k_coverage(spark):
@@ -2246,12 +2277,13 @@ def test_tfidf_strategies_row_identical(spark, near_dup_docs, tiny_vocab_docs):
     for corpus in (near_dup_docs, tiny_vocab_docs):
         outs = {}
         for strat in ("index", "blocked", "auto"):
-            df = D.tfidf_cosine_pairs(corpus, threshold=0.3, strategy=strat)
-            outs[strat] = sorted(
-                (r["id_a"], r["id_b"], r["cosine"]) for r in df.collect()
-            )
-            if hasattr(df, "cache_scope"):
-                df.cache_scope.release()
+            with CacheScope() as scope:
+                df = D.tfidf_cosine_pairs(
+                    corpus, threshold=0.3, strategy=strat, scope=scope
+                )
+                outs[strat] = sorted(
+                    (r["id_a"], r["id_b"], r["cosine"]) for r in df.collect()
+                )
         assert outs["index"] == outs["blocked"]
         assert outs["index"] == outs["auto"]
         assert outs["index"]  # non-empty: the test saw real pairs
@@ -2272,10 +2304,9 @@ def test_tfidf_auto_dispatch_boundary(spark, tiny_vocab_docs):
             df.explain("formatted")
         return buf.getvalue()
 
-    blocked = D.tfidf_cosine_pairs(tiny_vocab_docs, threshold=0.3)
-    assert "FlatMapGroupsInPandas" in plan_of(blocked)
-    if hasattr(blocked, "cache_scope"):
-        blocked.cache_scope.release()
+    with CacheScope() as scope:
+        blocked = D.tfidf_cosine_pairs(tiny_vocab_docs, threshold=0.3, scope=scope)
+        assert "FlatMapGroupsInPandas" in plan_of(blocked)
 
     # 40 docs of 6 tokens each, every token unique to its doc:
     # sum(df²) = 240 < n² = 1600 → the index premise holds.
@@ -2285,10 +2316,9 @@ def test_tfidf_auto_dispatch_boundary(spark, tiny_vocab_docs):
     unique_docs = spark.createDataFrame(
         unique_rows, "doc_id long, text string"
     )
-    index = D.tfidf_cosine_pairs(unique_docs, threshold=0.3)
-    assert "FlatMapGroupsInPandas" not in plan_of(index)
-    if hasattr(index, "cache_scope"):
-        index.cache_scope.release()
+    with CacheScope() as scope:
+        index = D.tfidf_cosine_pairs(unique_docs, threshold=0.3, scope=scope)
+        assert "FlatMapGroupsInPandas" not in plan_of(index)
 
 
 def test_tfidf_blocked_canonical_group_no_duplicates(spark, tiny_vocab_docs):
@@ -2296,14 +2326,13 @@ def test_tfidf_blocked_canonical_group_no_duplicates(spark, tiny_vocab_docs):
     (the canonical (min,max) block group) — no duplicate pair rows at
     any n_blocks, including n_blocks larger than the doc count."""
     for n_blocks in (2, 8, 64):
-        df = D.tfidf_cosine_pairs(
-            tiny_vocab_docs, threshold=0.3, strategy="blocked",
-            n_blocks=n_blocks,
-        )
-        rows = [(r["id_a"], r["id_b"]) for r in df.collect()]
+        with CacheScope() as scope:
+            df = D.tfidf_cosine_pairs(
+                tiny_vocab_docs, threshold=0.3, strategy="blocked",
+                n_blocks=n_blocks, scope=scope,
+            )
+            rows = [(r["id_a"], r["id_b"]) for r in df.collect()]
         assert len(rows) == len(set(rows)), f"dup pairs at n_blocks={n_blocks}"
-        if hasattr(df, "cache_scope"):
-            df.cache_scope.release()
 
 
 def test_tfidf_blocked_negative_ids_not_dropped(spark, tiny_vocab_docs):
@@ -2316,12 +2345,13 @@ def test_tfidf_blocked_negative_ids_not_dropped(spark, tiny_vocab_docs):
     )
     outs = {}
     for strat in ("index", "blocked"):
-        df = D.tfidf_cosine_pairs(neg, threshold=0.3, strategy=strat)
-        outs[strat] = sorted(
-            (r["id_a"], r["id_b"], r["cosine"]) for r in df.collect()
-        )
-        if hasattr(df, "cache_scope"):
-            df.cache_scope.release()
+        with CacheScope() as scope:
+            df = D.tfidf_cosine_pairs(
+                neg, threshold=0.3, strategy=strat, scope=scope
+            )
+            outs[strat] = sorted(
+                (r["id_a"], r["id_b"], r["cosine"]) for r in df.collect()
+            )
     assert outs["index"] == outs["blocked"]
     assert outs["index"]  # non-empty: the test saw real pairs
 
@@ -2334,11 +2364,12 @@ def test_tfidf_blocked_schema_strategy_independent(spark, tiny_vocab_docs):
     )
     types = {}
     for strat in ("index", "blocked"):
-        df = D.tfidf_cosine_pairs(int_docs, threshold=0.3, strategy=strat)
-        types[strat] = [df.schema[c].dataType.simpleString()
-                        for c in ("id_a", "id_b")]
-        if hasattr(df, "cache_scope"):
-            df.cache_scope.release()
+        with CacheScope() as scope:
+            df = D.tfidf_cosine_pairs(
+                int_docs, threshold=0.3, strategy=strat, scope=scope
+            )
+            types[strat] = [df.schema[c].dataType.simpleString()
+                            for c in ("id_a", "id_b")]
     assert types["index"] == types["blocked"] == ["int", "int"]
 
 
@@ -2357,13 +2388,14 @@ def test_tfidf_blocked_guards(spark, tiny_vocab_docs):
     import io
     from contextlib import redirect_stdout
 
-    auto = D.tfidf_cosine_pairs(str_docs, threshold=0.3, strategy="auto")
     buf = io.StringIO()
-    with redirect_stdout(buf):
-        auto.explain("formatted")
+    with CacheScope() as scope:
+        auto = D.tfidf_cosine_pairs(
+            str_docs, threshold=0.3, strategy="auto", scope=scope
+        )
+        with redirect_stdout(buf):
+            auto.explain("formatted")
     assert "FlatMapGroupsInPandas" not in buf.getvalue()
-    if hasattr(auto, "cache_scope"):
-        auto.cache_scope.release()
 
 
 def test_tfidf_auto_vocab_budget_guard(spark, monkeypatch):
@@ -2386,10 +2418,11 @@ def test_tfidf_auto_vocab_budget_guard(spark, monkeypatch):
     import io
     from contextlib import redirect_stdout
 
-    auto = D.tfidf_cosine_pairs(docs, threshold=0.3, strategy="auto")
     buf = io.StringIO()
-    with redirect_stdout(buf):
-        auto.explain("formatted")
+    with CacheScope() as scope:
+        auto = D.tfidf_cosine_pairs(
+            docs, threshold=0.3, strategy="auto", scope=scope
+        )
+        with redirect_stdout(buf):
+            auto.explain("formatted")
     assert "FlatMapGroupsInPandas" not in buf.getvalue()
-    if hasattr(auto, "cache_scope"):
-        auto.cache_scope.release()

@@ -613,25 +613,24 @@ def test_duplicate_spans_plan_shape(spark):
 def test_pagerank_plan_lineage_is_pinned(spark):
     """Each iteration checkpoints: the returned ranks plan must be a
     flat scan of the pinned result (no join tower re-deriving K rounds
-    from raw edges), with the persisted edge scope attached for
-    caller-owned release."""
-    from dwh_with_dask_spark.operators.caching import CacheScope, release_caches
+    from raw edges), and the persisted edge table belongs to the
+    caller's scope: releasing it frees the cache entry."""
+    from dwh_with_dask_spark.operators.caching import CacheScope
     from dwh_with_dask_spark.operators.graph import pagerank
 
     e = spark.createDataFrame(
         [("a", "b", 1.0), ("b", "c", 2.0), ("c", "a", 1.0)],
         "src string, dst string, w double",
     )
-    ranks = pagerank(e, weight="w", iters=2)
-    try:
+    with CacheScope() as scope:
+        ranks = pagerank(e, weight="w", iters=2, scope=scope)
         plan = plan_of(ranks)
         assert "ExistingRDD" in plan          # localCheckpoint scan
         assert "Join" not in plan             # lineage truncated
-        assert isinstance(
-            getattr(ranks, "cache_scope", None), CacheScope
-        )
-    finally:
-        release_caches(ranks)
+        pinned = list(scope._dfs)             # edge and node tables
+        assert pinned
+        assert all(d.storageLevel.useMemory for d in pinned)
+    assert not any(d.storageLevel.useMemory for d in pinned)
 
 
 def test_pq_probe_plan_is_python_free(spark):
