@@ -14,10 +14,10 @@ Scale design (what makes this 100 TB-shaped):
 - Each iteration is: weighted adjacent-pair count (explode + sum over
   the vocab frame), a 1-row top-pair collect (metadata-sized, the IVF
   centroid idiom), and a row-local fold applying the merge
-  left-to-right. The per-iteration frame is checkpointed with the
-  connected-components ``_pin`` idiom — a fixpoint loop that only
-  persists leaves its logical plan growing one fold per round, which
-  blows up compilation long before data does.
+  left-to-right. The per-iteration frame is pinned with
+  ``caching.pin`` (as connected components does) — a fixpoint loop
+  that only persists leaves its logical plan growing one fold per
+  round, which blows up compilation long before data does.
 - Encoding applies the learned ranks per word in an Arrow-batched
   ``mapInPandas`` with a per-batch word memo — Python, but batch-
   vectorized and embarrassingly parallel; the merge table broadcasts
@@ -33,17 +33,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dwh_with_dask_spark.operators.caching import pin
 from dwh_with_dask_spark.operators.dedup import text_tokens
 
 END = "</w>"
-
-
-def _pin(df: DataFrame) -> DataFrame:
-    spark = df.sparkSession
-    reliable = spark.sparkContext._jsc.sc().getCheckpointDir().isDefined()
-    return df.checkpoint(eager=True) if reliable else df.localCheckpoint(
-        eager=True
-    )
 
 
 def word_frequency(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -170,7 +163,7 @@ def bpe_learn(
             return _bpe_learn_driver(
                 [(r["word"], r["cnt"]) for r in head], n_merges, min_freq
             )
-    words = _pin(
+    words = pin(
         wf.select(
             _chars("word").alias("sym"), "cnt"
         )
@@ -199,7 +192,7 @@ def bpe_learn(
         l, r, freq = top[0].l, top[0].r, int(top[0].freq)
         merged = l + r
         merges.append((rank, l, r, merged, freq))
-        words = _pin(
+        words = pin(
             words.select(_apply_merge(F.col("sym"), l, r, merged).alias("sym"), "cnt")
         )
     return merges

@@ -26,6 +26,11 @@ plan, so neither Python nor JVM garbage collection reclaims the
 blocks. Long-lived sessions pass a scope, or clear the session cache
 between independent units of work (the registry runners do the
 latter).
+
+Iterative operators (PageRank, connected components, the BPE merge
+loop) instead ``pin`` each round's frame: an eager ``localCheckpoint``
+that materializes the rows and cuts the lineage, so the logical plan
+stays flat across iterations.
 """
 
 from __future__ import annotations
@@ -72,3 +77,12 @@ class CacheScope:
     def __exit__(self, *exc) -> None:
         self.release()
 
+
+
+def pin(df: DataFrame) -> DataFrame:
+    """Materialize ``df`` now and truncate its lineage (an eager
+    ``localCheckpoint``). A fixpoint loop that only persists caches the
+    data but leaves its logical plan growing one round deeper per
+    iteration, which blows up plan compilation long before any executor
+    does real work; pinning each round keeps the plan flat."""
+    return df.localCheckpoint(eager=True)

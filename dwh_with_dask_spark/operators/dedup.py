@@ -22,7 +22,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from dwh_with_dask_spark.operators.caching import CacheScope
+from dwh_with_dask_spark.operators.caching import CacheScope, pin
 from dwh_with_dask_spark.operators.partitioning import barrier, widen
 
 #: auto-dispatch decisions, with the measured quantities behind them
@@ -1280,9 +1280,8 @@ def connected_components(
     (two longs), never the documents. Near-dup clusters are shallow
     (stars/cliques), so 2-4 rounds in practice; pointer jumping bounds
     pathological chains at O(log diameter) and ``max_iter`` is the hard
-    stop. Each round the labels are checkpointed (reliable checkpoint
-    when the session has a checkpoint dir, ``localCheckpoint`` otherwise)
-    — persist alone is NOT enough for a fixpoint loop: it caches data but
+    stop. Each round the labels are pinned (``caching.pin``, an eager
+    ``localCheckpoint``) — persist alone is NOT enough for a fixpoint loop: it caches data but
     leaves the logical plan growing exponentially round over round, which
     blows up plan compilation long before any executor does real work
     (cf. large-star/small-star in the public connected-components
@@ -1291,22 +1290,13 @@ def connected_components(
     ``nodes`` (optional) adds isolated nodes: they come out as their own
     singleton components.
     """
-    spark = edges.sparkSession
-    reliable = spark.sparkContext._jsc.sc().getCheckpointDir().isDefined()
-
-    def _pin(df: DataFrame) -> DataFrame:
-        # Truncate lineage so the plan stays flat across iterations.
-        return df.checkpoint(eager=True) if reliable else df.localCheckpoint(
-            eager=True
-        )
-
     a, b = F.col(src).alias("a"), F.col(dst).alias("b")
     # Pin the symmetrized edge list BEFORE the loop: ``edges`` is
     # usually the OUTPUT OF AN EXPENSIVE PAIR GENERATOR (the inverted-
     # index Jaccard join here costs ~15 s at sf1), and the loop body
     # references it every round — unpinned, each iteration re-runs the
     # whole generator (measured 238 s vs ~30 s for the full query).
-    bidir = _pin(
+    bidir = pin(
         edges.select(a, b)
         .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
         .distinct()
@@ -1322,7 +1312,7 @@ def connected_components(
             .select("node", F.col("node").alias("component"))
             .unionByName(labels)
         )
-    labels = _pin(labels)
+    labels = pin(labels)
 
     for _ in range(max_iter):
         cand = bidir.join(
@@ -1355,7 +1345,7 @@ def connected_components(
         # jobs) is gone. Every node has exactly one old row, so
         # min(when(__old, component)) is its previous component and
         # the changed-set is identical to the join formulation's.
-        new_labels = _pin(
+        new_labels = pin(
             labels.select("node", "component", F.lit(1).alias("__old"))
             .unionByName(cand)
             .unionByName(jump)

@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from dwh_with_dask_spark.operators.caching import CacheScope
+from dwh_with_dask_spark.operators.caching import CacheScope, pin
 
 
 #: broadcast the node-sized rank/contribution frames into the
@@ -57,19 +57,6 @@ def pagerank(
     oracle twin exactly.
     """
     scope = scope or CacheScope()
-    spark = edges.sparkSession
-    reliable = spark.sparkContext._jsc.sc().getCheckpointDir().isDefined()
-
-    def _pin(df: DataFrame) -> DataFrame:
-        # Same contract as dedup.connected_components: truncate lineage
-        # each round so the plan stays flat (persist caches data but the
-        # logical plan would still grow join-deep per iteration, and the
-        # repeated reference to ``norm`` inside its own derivation would
-        # trip self-join column resolution).
-        return df.checkpoint(eager=True) if reliable else df.localCheckpoint(
-            eager=True
-        )
-
     w = F.col(weight).cast("double") if weight else F.lit(1.0)
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"), w.alias("w"))
     if undirected:
@@ -113,7 +100,10 @@ def pagerank(
             .agg(F.sum(F.col("rank") * F.col("p")).alias("__c"))
             .withColumnRenamed("dst", "node")
         )
-        ranks = _pin(
+        # pin each round (see caching.pin): besides flattening the plan,
+        # it keeps the repeated reference to ``norm`` inside its own
+        # derivation from tripping self-join column resolution
+        ranks = pin(
             nodes.join(_b(contrib), "node", "left").select(
                 "node",
                 (F.lit(base) + damping * F.coalesce("__c", F.lit(0.0))).alias(

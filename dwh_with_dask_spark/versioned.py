@@ -142,11 +142,11 @@ def versioned_commit(
     stores per-data-dir min/max in the manifest — the table format's
     data-skipping layer: ``read_version(..., prune=...)`` drops whole
     directories whose range cannot match, BEFORE Spark ever lists
-    their files. One extra aggregate over the just-written BATCH (never
-    the table) per commit; append commits carry prior dirs' stats
-    forward untouched. At 100 TB with time/tenant-ordered appends this
-    is the difference between scanning one day's directory and listing
-    every file the table ever wrote.
+    their files. The min/max is observed on the write itself (no extra
+    Spark job, never a scan of the table); append commits carry prior
+    dirs' stats forward untouched. At 100 TB with time/tenant-ordered
+    appends this is the difference between scanning one day's
+    directory and listing every file the table ever wrote.
 
     ``member_cols`` stores a per-dir KEY-MEMBERSHIP index — the
     Bloom/dictionary-skipping analog of min/max: each dir records the
@@ -166,14 +166,16 @@ def versioned_commit(
     expressions — the Delta-Lake constraint contract: constraints are
     TABLE metadata, persisted in the manifest and re-enforced on every
     subsequent commit without re-passing them; a new entry adds or
-    replaces a constraint, a ``None`` value drops one. Validation runs
-    on the WRITTEN bytes (the staged data dir read back — the same
-    read-back the stats/members passes use), never on the incoming
-    plan: validating ``df`` itself would evaluate the plan twice, and
-    a nondeterministic frame (rand, changing source) could pass
-    validation yet persist violating rows under a manifest claiming
-    the constraints hold (ADVICE r10). A row violates a constraint
-    when its expression is FALSE — NULL passes, ANSI CHECK semantics;
+    replaces a constraint, a ``None`` value drops one. Violations are
+    counted in the SAME evaluation that writes the rows (an observation
+    on the write job, shared with the stats and members; see
+    ``_write_observed``), never in a second action over ``df``:
+    evaluating the plan twice would let a nondeterministic frame (rand,
+    changing source) pass validation yet persist violating rows under a
+    manifest claiming the constraints hold (ADVICE r10). The staged dir
+    is never read back either; its row count comes from the parquet
+    footers. A row violates a constraint when its expression is
+    FALSE — NULL passes, ANSI CHECK semantics;
     any violation DELETES the staged data dir and raises with
     per-constraint counts, leaving the table at its prior version,
     fully readable (the pointer never moved, so no reader ever saw the
@@ -279,8 +281,8 @@ def versioned_commit(
             batch_schema = table_schema
 
     # --- CHECK constraints: inherit from the previous manifest, apply
-    # the caller's adds/replacements/drops. Validation happens BELOW,
-    # on the read-back of the written bytes (see docstring).
+    # the caller's adds/replacements/drops. Validation is observed on
+    # the write itself (see docstring and _write_observed).
     constraints: dict = {}
     if pm_prev is not None:
         constraints = dict(pm_prev.get("constraints", {}))
@@ -290,69 +292,18 @@ def versioned_commit(
         else:
             constraints[name] = expr
 
-    version = prev + 1
-    # Staging-dir CLAIM (round 13, via _claim_staging): take data/v<N>
-    # with an atomic ``os.mkdir``; a held name falls back to a
-    # writer-unique suffix. Disjoint staging is what makes the race
-    # SAFE: no committer can ever touch bytes another committer's
-    # manifest might reference. The manifest records the actual dir,
-    # so readers never care about the name. mode('append') into the
-    # exclusively-owned empty dir is a fresh write; exclusivity is the
-    # mkdir claim, not the write mode.
-    rel_dir, data_dir = _claim_staging(table, version)
-    df.write.mode("append").parquet(data_dir)
-
-    if constraints:
-        # Validate the WRITTEN bytes (the dir is still staging, so a
-        # violation deletes it and the table stays at its prior
-        # version — rows checked are exactly what a reader would see,
-        # even when df's plan is nondeterministic; ADVICE r10). The
-        # read binds the schema this commit will RECORD, so a
-        # merge_schema append that legitimately omits a column a
-        # constraint references resolves it as NULL (CHECK passes)
-        # instead of dying in analysis on the footer-inferred schema.
-        from pyspark.sql.types import StructType
-
-        reader = (
-            df.sparkSession.read.schema(StructType.fromJson(batch_schema))
-            if batch_schema is not None
-            else df.sparkSession.read
-        )
-        _validate_constraints(
-            df.sparkSession, data_dir, constraints, reader,
-            "versioned_commit", table, prev,
-        )
-
-    stats: dict = {}
-    if stats_cols:
-        from pyspark.sql import functions as F
-
-        # one agg over the written batch; re-read the dir so the stats
-        # describe exactly the committed bytes
-        batch = df.sparkSession.read.parquet(data_dir)
-        row = batch.agg(
-            *[F.min(c).alias(f"lo_{c}") for c in stats_cols],
-            *[F.max(c).alias(f"hi_{c}") for c in stats_cols],
-        ).first()
-        stats[rel_dir] = {
-            c: [_json_stat(row[f"lo_{c}"]), _json_stat(row[f"hi_{c}"])]
-            for c in stats_cols
-        }
-
-    members: dict = {}
     if member_cols:
-        from pyspark.sql import functions as F
-
-        batch = df.sparkSession.read.parquet(data_dir)
         # Membership columns are restricted to integral/string types:
         # the driver-side probe (manifest_dirs prune_eq) hashes Python
         # str(val), which equals Spark's cast-to-string only for those
         # types (ADVICE r9 — bool/float/Decimal/timestamp renderings
         # diverge and a diverged position wrongly prunes). Fail at
-        # COMMIT time, not at the first probe months later.
+        # COMMIT time, before anything is staged, not at the first
+        # probe months later.
         _member_ok = {"tinyint", "smallint", "int", "bigint", "string"}
+        types = dict(df.dtypes)
         for c in member_cols:
-            t = dict(batch.dtypes).get(c)
+            t = types.get(c)
             if t is None:
                 raise ValueError(f"member_cols column {c!r} not in batch")
             if t not in _member_ok:
@@ -362,24 +313,15 @@ def versioned_commit(
                     "(driver-side probe hashing must match Spark's "
                     "cast-to-string rendering). Cast the column first."
                 )
-        mem: dict = {}
-        for c in member_cols:
-            # distinct positions over the BATCH — bounded at MEMBER_BITS
-            # rows, driver-safe by construction
-            pos = batch.select(
-                F.pmod(
-                    F.crc32(F.encode(F.col(c).cast("string"), "UTF-8")),
-                    F.lit(MEMBER_BITS),
-                ).alias("p")
-            ).distinct().collect()
-            mem[c] = sorted(int(r.p) for r in pos if r.p is not None)
-        members[rel_dir] = mem
 
-    # Per-dir content fingerprint for fsck(deep=True): rows from the
-    # parquet footers + size/sentinel-crc per file. Computed AFTER
-    # constraint validation (a rejected batch is deleted, not
-    # fingerprinted); cost bounded by the batch's file count.
-    integrity = {rel_dir: _dir_integrity(table, rel_dir)}
+    version = prev + 1
+    rel_dir, rec, st, mem = _write_observed(
+        df, table, version, prev, "versioned_commit", stats_cols or [],
+        member_cols or [], constraints, batch_schema,
+    )
+    stats = {rel_dir: st} if stats_cols else {}
+    members = {rel_dir: mem} if member_cols else {}
+    integrity = {rel_dir: rec}
     dirs = [rel_dir]
     if mode == "append" and pm_prev is not None:
         pm = pm_prev
@@ -791,29 +733,71 @@ def read_version(
     return reader.parquet(*[os.path.join(table, d) for d in dirs])
 
 
-def _validate_constraints(
-    spark, data_dir: str, constraints: dict, reader, op: str,
-    table: str, prev: int,
-) -> None:
-    """Validate WRITTEN bytes against the table's CHECK constraints —
-    the same read-back contract as ``versioned_commit`` (a row violates
-    when its expression is FALSE; NULL passes). On violation the
-    staged dir is deleted and the commit raises, leaving the table at
-    its prior version. ``reader`` must bind the table's recorded
-    schema so constraints referencing columns absent from the staged
-    bytes resolve as NULL instead of failing analysis."""
+def _write_observed(
+    df: DataFrame, table: str, version: int, prev: int, op: str,
+    stats_cols: list[str], member_cols: list[str], constraints: dict,
+    schema: dict | None,
+) -> tuple[str, dict, dict, dict]:
+    """Stage ``df`` as ``version``'s data dir in ONE write and return
+    ``(rel_dir, integrity, stats, members)`` — the dir's footer
+    fingerprint (``_dir_integrity``, whose ``"rows"`` is the row
+    count), per-column ``[min, max]`` and per-column member positions.
+
+    The min/max, member-position sets and CHECK violation counts are a
+    single ``DataFrame.observe`` on the frame being written, so they
+    describe exactly the rows that hit disk: a nondeterministic plan
+    (rand, a changing source) is evaluated once, and the staged dir is
+    never read back (ADVICE r10). A row violates a constraint when its
+    expression is FALSE — NULL passes, ANSI CHECK semantics. Any
+    violation DELETES the staged dir and raises with per-constraint
+    counts before anything is published, so the table stays at
+    ``prev``. ``schema`` is the schema the commit records: columns it
+    has and ``df`` lacks (a ``merge_schema`` append) enter the observed
+    projection as typed NULLs — what a reader of the dir sees — and
+    never the written bytes."""
+    import shutil
+
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
+    from pyspark.sql.types import StructType
 
-    batch = reader.parquet(data_dir)
-    checks = [
-        F.sum((~F.coalesce(F.expr(e), F.lit(True))).cast("long")).alias(name)
-        for name, e in constraints.items()
+    checks = list(constraints.items())
+    metrics = [
+        *[F.min(c).alias(f"lo{i}") for i, c in enumerate(stats_cols)],
+        *[F.max(c).alias(f"hi{i}") for i, c in enumerate(stats_cols)],
+        *[
+            F.collect_set(
+                F.pmod(
+                    F.crc32(F.encode(F.col(c).cast("string"), "UTF-8")),
+                    F.lit(MEMBER_BITS),
+                )
+            ).alias(f"m{i}")
+            for i, c in enumerate(member_cols)
+        ],
+        *[
+            F.sum((~F.coalesce(F.expr(e), F.lit(True))).cast("long"))
+            .alias(f"c{i}")
+            for i, (_, e) in enumerate(checks)
+        ],
     ]
-    row = batch.agg(*checks).first()
-    bad = {n: int(row[n]) for n in constraints if row[n]}
+    obs = Observation()
+    out = df
+    if metrics:
+        have = {c.lower() for c in df.columns}  # never shadow a df column
+        absent = {
+            f.name: F.lit(None).cast(f.dataType)
+            for f in StructType.fromJson(schema).fields
+            if f.name.lower() not in have
+        } if schema is not None else {}
+        out = df.withColumns(absent).observe(obs, *metrics).drop(*absent)
+    rel_dir, data_dir = _claim_staging(table, version)
+    out.write.mode("append").parquet(data_dir)
+    row = obs.get if metrics else {}
+    bad = {
+        n: int(row[f"c{i}"]) for i, (n, _) in enumerate(checks)
+        if row[f"c{i}"]
+    }
     if bad:
-        import shutil
-
         shutil.rmtree(data_dir, ignore_errors=True)
         raise ValueError(
             f"{op}: CHECK constraint violation(s) on {table!r}: "
@@ -821,12 +805,23 @@ def _validate_constraints(
             + " — nothing was committed (table stays at version "
             f"{prev})."
         )
+    stats = {
+        c: [_json_stat(row[f"lo{i}"]), _json_stat(row[f"hi{i}"])]
+        for i, c in enumerate(stats_cols)
+    }
+    members = {c: sorted(row[f"m{i}"]) for i, c in enumerate(member_cols)}
+    return rel_dir, _dir_integrity(table, rel_dir), stats, members
 
 
 def _claim_staging(table: str, version: int) -> tuple[str, str]:
-    """Claim an exclusive staging data dir for ``version`` (atomic
-    mkdir, writer-unique fallback) — the same disjoint-staging contract
-    as ``versioned_commit``. Returns (rel_dir, abs_dir)."""
+    """Claim an exclusive staging data dir for ``version``: take
+    ``data/v<N>`` with an atomic ``os.mkdir``; a held name falls back to
+    a writer-unique suffix. Disjoint staging is what makes a commit race
+    SAFE: no committer can ever touch bytes another committer's
+    manifest might reference, and the manifest records the actual dir,
+    so readers never care about the name. Writes into the claimed dir
+    use mode('append') — exclusivity is the mkdir claim, not the write
+    mode. Returns (rel_dir, abs_dir)."""
     os.makedirs(os.path.join(table, "data"), exist_ok=True)
     rel_dir = os.path.join("data", f"v{version}")
     data_dir = os.path.join(table, rel_dir)
@@ -923,6 +918,7 @@ def _rewrite_version(
     prune_eq: dict[str, object] | None,
     auto_compact_at: int | None = None,
 ) -> dict:
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     _check_auto_compact_arg(auto_compact_at)
@@ -961,10 +957,7 @@ def _rewrite_version(
         }
 
     src = reader.parquet(*[os.path.join(table, d) for d in affected])
-    if assign is None:
-        out = src.filter(~F.coalesce(pred, F.lit(False)))
-        n_changed = src.filter(pred).count()
-    else:
+    if assign is not None:
         for col, expr in assign.items():
             if col not in src.columns:
                 raise ValueError(f"versioned_update: no column {col!r}")
@@ -977,6 +970,12 @@ def _rewrite_version(
                     f"{new_t.simpleString()} — the recorded schema is "
                     "immutable under update; cast the expression."
                 )
+    if assign is None:
+        out = src.filter(~F.coalesce(pred, F.lit(False)))
+    else:
+        # the updated-row count rides the rewrite's own write job
+        changed = Observation()
+        src = src.observe(changed, F.count_if(pred).alias("n"))
         # ONE projection over the ORIGINAL row: SQL UPDATE semantics —
         # the predicate and every RHS evaluate against pre-update
         # values. Sequential withColumn would re-resolve both against
@@ -991,34 +990,31 @@ def _rewrite_version(
                 for c in src.columns
             ]
         )
-        n_changed = src.filter(pred).count()
 
-    version = prev + 1
-    rel_dir, data_dir = _claim_staging(table, version)
-    out.write.mode("append").parquet(data_dir)
-
-    # UPDATE re-validates the rewritten bytes against the table's CHECK
+    # UPDATE re-validates the rewritten rows against the table's CHECK
     # constraints (an assignment can introduce a violation); DELETE
     # does not — removal of rows cannot create one, and pre-existing
     # violations in carried-forward rows must never block an erasure.
-    if assign is not None and m.get("constraints"):
-        _validate_constraints(
-            spark, data_dir, m["constraints"], reader,
-            "versioned_update", table, prev,
-        )
-
-    # recompute the rewritten dir's indexes over the columns the
-    # affected dirs carried (union), from the written bytes
-    stat_cols = sorted(
-        {c for d in affected for c in m.get("stats", {}).get(d, {})}
+    # The rewritten dir's indexes cover the columns the affected dirs
+    # carried (union).
+    version = prev + 1
+    n_rows = _finalize_rewrite(
+        out, table, m, prev, version, kept, label,
+        m.get("constraints", {}) if assign is not None else {},
+        sorted({c for d in affected for c in m.get("stats", {}).get(d, {})}),
+        sorted({c for d in affected for c in m.get("members", {}).get(d, {})}),
     )
-    member_cols = sorted(
-        {c for d in affected for c in m.get("members", {}).get(d, {})}
-    )
-    _finalize_rewrite(
-        spark, table, m, prev, version, kept, rel_dir, data_dir,
-        label, reader, rec_schema, stat_cols, member_cols,
-    )
+    if assign is None:
+        # deleted = rows in the affected dirs - rows rewritten, both from
+        # parquet footers, so no Spark job. (An observation on ``src``
+        # is optimized away with the filter's input when the predicate
+        # folds to constant TRUE, leaving no metrics to read.)
+        n_changed = sum(
+            (m.get("integrity", {}).get(d) or _dir_integrity(table, d))["rows"]
+            for d in affected
+        ) - n_rows
+    else:
+        n_changed = changed.get["n"]
     out = {
         "version": version,
         "dirs_kept": len(kept),
@@ -1071,70 +1067,41 @@ def _probe_affected_dirs(table, probe_dirs, matching_rows) -> list:
 
 
 def _finalize_rewrite(
-    spark, table, m, prev, version, kept, rel_dir, data_dir,
-    label, reader, rec_schema, stat_cols, member_cols,
-    want_count: bool = False,
-) -> int | None:
+    out, table, m, prev, version, kept, label, constraints, stat_cols,
+    member_cols,
+) -> int:
     """Shared tail of the copy-on-write commits (delete/update/merge):
-    carry kept dirs' indexes forward, recompute the rewritten dir's
-    from its written bytes, publish the manifest via the CAS claim.
-    ``want_count=True`` returns the rewritten dir's row count from the
-    same read-back (parquet footer metadata — saves the caller a
-    separate job)."""
-    from pyspark.sql import functions as F
-
-    dirs = kept + [rel_dir]
-    stats = {d: s for d, s in m.get("stats", {}).items() if d in set(kept)}
-    members = {}
-    if m.get("member_bits", MEMBER_BITS) == MEMBER_BITS:
-        members = {
-            d: mm for d, mm in m.get("members", {}).items() if d in set(kept)
-        }
-    n_rows = None
-    if want_count:
-        n_rows = reader.parquet(data_dir).count()
-        has_rows = n_rows > 0
-    else:
-        has_rows = bool(reader.parquet(data_dir).limit(1).count())
-    if not has_rows:
-        dirs = kept  # a rewrite that emptied every affected dir
-    else:
-        batch = reader.parquet(data_dir)
+    write ``out`` once through ``_write_observed`` (validating
+    ``constraints`` and indexing the new dir from that same write),
+    carry kept dirs' indexes forward, and publish the manifest via the
+    CAS claim. Returns the new dir's row count (from its footers); a
+    rewrite that emptied every affected dir references no new dir."""
+    keep = set(kept)
+    stats = {d: s for d, s in m.get("stats", {}).items() if d in keep}
+    members = {d: x for d, x in m.get("members", {}).items() if d in keep}
+    if m.get("member_bits", MEMBER_BITS) != MEMBER_BITS:
+        # mismatched position space: drop the index, never mis-prune
+        members, member_cols = {}, []
+    rel_dir, rec, st, mem = _write_observed(
+        out, table, version, prev, f"versioned_{label}", stat_cols,
+        member_cols, constraints, m.get("schema"),
+    )
+    dirs = list(kept)
+    # integrity: kept dirs carry their fingerprints forward (bytes
+    # untouched); the rewritten dir is fingerprinted from its new bytes
+    integrity = {d: r for d, r in m.get("integrity", {}).items() if d in keep}
+    if rec["rows"]:
+        dirs.append(rel_dir)
+        integrity[rel_dir] = rec
         if stat_cols:
-            row = batch.agg(
-                *[F.min(c).alias(f"lo_{c}") for c in stat_cols],
-                *[F.max(c).alias(f"hi_{c}") for c in stat_cols],
-            ).first()
-            stats[rel_dir] = {
-                c: [_json_stat(row[f"lo_{c}"]), _json_stat(row[f"hi_{c}"])]
-                for c in stat_cols
-            }
-        if member_cols and m.get("member_bits", MEMBER_BITS) == MEMBER_BITS:
-            mem: dict = {}
-            for c in member_cols:
-                pos = batch.select(
-                    F.pmod(
-                        F.crc32(F.encode(F.col(c).cast("string"), "UTF-8")),
-                        F.lit(MEMBER_BITS),
-                    ).alias("p")
-                ).distinct().collect()
-                mem[c] = sorted(int(r.p) for r in pos if r.p is not None)
+            stats[rel_dir] = st
+        if member_cols:
             members[rel_dir] = mem
 
     manifest = {"version": version, "mode": label, "dirs": dirs}
-    # integrity: kept dirs carry their fingerprints forward (bytes
-    # untouched); the rewritten dir is re-fingerprinted from its new
-    # bytes — same carry/recompute split as stats/members
-    integrity = {
-        d: rec
-        for d, rec in m.get("integrity", {}).items()
-        if d in set(kept)
-    }
-    if has_rows:
-        integrity[rel_dir] = _dir_integrity(table, rel_dir)
     manifest["integrity"] = {d: integrity[d] for d in dirs if d in integrity}
-    if rec_schema is not None:
-        manifest["schema"] = rec_schema
+    if m.get("schema") is not None:
+        manifest["schema"] = m["schema"]
     if stats:
         manifest["stats"] = stats
     if members:
@@ -1143,7 +1110,7 @@ def _finalize_rewrite(
     if m.get("constraints"):
         manifest["constraints"] = m["constraints"]
     _publish(table, version, manifest, prev)
-    return n_rows
+    return rec["rows"]
 
 
 def versioned_merge(
@@ -1269,30 +1236,17 @@ def versioned_merge(
                 "with merge_schema=True first."
             )
 
+    # MERGE re-validates the rewritten rows (updates + inserts) against
+    # the table's CHECK constraints — a violating source batch must not
+    # slip past the manifest that claims the constraints hold. The
+    # rewritten dir absorbs updates AND inserts: index it over every
+    # column the TABLE carries indexes for, not just the affected dirs'.
     version = prev + 1
-    rel_dir, data_dir = _claim_staging(table, version)
-    out.write.mode("append").parquet(data_dir)
-    # MERGE re-validates the rewritten bytes (updates + inserts) against
-    # the table's CHECK constraints — same read-back contract as
-    # versioned_commit; a violating source batch must not slip past the
-    # manifest that claims the constraints hold.
-    if m.get("constraints"):
-        _validate_constraints(
-            spark, data_dir, m["constraints"], reader,
-            "versioned_merge", table, prev,
-        )
-    # the rewritten dir absorbs updates AND inserts: index it over every
-    # column the TABLE carries indexes for, not just the affected dirs'
-    stat_cols = sorted(
-        {c for d in all_dirs for c in m.get("stats", {}).get(d, {})}
-    )
-    member_cols = sorted(
-        {c for d in all_dirs for c in m.get("members", {}).get(d, {})}
-    )
     n_written = _finalize_rewrite(
-        spark, table, m, prev, version, kept, rel_dir, data_dir,
-        "merge", reader, rec_schema, stat_cols, member_cols,
-        want_count=True,
+        out, table, m, prev, version, kept, "merge",
+        m.get("constraints", {}),
+        sorted({c for d in all_dirs for c in m.get("stats", {}).get(d, {})}),
+        sorted({c for d in all_dirs for c in m.get("members", {}).get(d, {})}),
     )
     out = {
         "version": version,

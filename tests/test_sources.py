@@ -1051,12 +1051,12 @@ def test_member_prune_type_matrix(spark, tmp_path):
 def test_versioned_check_constraints(spark, tmp_path):
     """Delta-style CHECK constraints on versioned tables: persisted in
     the manifest and re-enforced on every later commit without
-    re-passing them; validation runs on the WRITTEN bytes (staged data
-    dir read back — ADVICE r10: validating the incoming plan evaluates
-    it twice, and a nondeterministic frame could pass validation yet
-    persist violating rows); violations delete the staged dir and
-    raise (table stays at its prior version, readable); NULL passes
-    (ANSI CHECK); None drops a constraint."""
+    re-passing them; violations are counted in the same evaluation
+    that writes the rows (ADVICE r10: validating the incoming plan in a
+    second action evaluates it twice, and a nondeterministic frame
+    could pass validation yet persist violating rows); violations
+    delete the staged dir and raise (table stays at its prior version,
+    readable); NULL passes (ANSI CHECK); None drops a constraint."""
     import pytest
 
     from dwh_with_dask_spark.versioned import (
@@ -1119,9 +1119,10 @@ def test_versioned_check_constraints(spark, tmp_path):
         )
 
     # NONDETERMINISTIC frame: the rows validated are the rows written
-    # (read-back), so a rand-bearing plan cannot sneak violating rows
-    # past a separately-evaluated check — the commit must reject and
-    # leave no staged bytes
+    # (one evaluation feeds both the write and the check), so a
+    # rand-bearing plan cannot sneak violating rows past a
+    # separately-evaluated check — the commit must reject and leave no
+    # staged bytes
     from pyspark.sql import functions as F
 
     nd = spark.range(200).select(
@@ -1134,6 +1135,161 @@ def test_versioned_check_constraints(spark, tmp_path):
             nd, t2, expect={"amount_nonneg": "amount >= 0"}
         )
     assert not os.path.exists(os.path.join(t2, "data", "v1"))
+
+
+def _assert_manifest_describes_bytes(spark, t):
+    """The current manifest's stats, member positions and row count for
+    its newest dir equal a Spark re-read of that dir, and deep fsck is
+    clean."""
+    import json
+    import os
+
+    from dwh_with_dask_spark.versioned import (
+        MEMBER_BITS,
+        _json_stat,
+        _manifest_path,
+        current_version,
+        fsck,
+    )
+
+    with open(_manifest_path(t, current_version(t))) as f:
+        m = json.load(f)
+    d = m["dirs"][-1]
+    back = spark.read.parquet(os.path.join(t, d))
+    cols = list(m["stats"][d])
+    row = back.agg(
+        F.count(F.lit(1)).alias("n"),
+        *[F.min(c).alias(f"lo_{c}") for c in cols],
+        *[F.max(c).alias(f"hi_{c}") for c in cols],
+    ).first()
+    assert m["integrity"][d]["rows"] == row["n"] > 0
+    assert m["stats"][d] == {
+        c: [_json_stat(row[f"lo_{c}"]), _json_stat(row[f"hi_{c}"])]
+        for c in cols
+    }
+    for c, got in m["members"][d].items():
+        pos = back.select(
+            F.pmod(
+                F.crc32(F.encode(F.col(c).cast("string"), "UTF-8")),
+                F.lit(MEMBER_BITS),
+            ).alias("p")
+        ).distinct().collect()
+        assert got == sorted(r.p for r in pos if r.p is not None)
+    rep = fsck(t, deep=True)
+    assert rep["ok"], rep["errors"]
+
+
+def test_versioned_metrics_come_from_the_write(spark, tmp_path):
+    """Manifest stats, member positions and row counts describe the
+    bytes written, even for a plan that draws new random values on
+    every evaluation: metrics computed by a separate action would miss
+    the re-read's min/max. Covers a commit (with a constraint the frame
+    passes) and a merge whose source is randomly redrawn."""
+    import random
+
+    from dwh_with_dask_spark.versioned import versioned_commit, versioned_merge
+
+    # F.rand() is seeded when its Column is built, so re-running a plan
+    # reproduces its values; a nondeterministic UDF over Python's
+    # unseeded ``random`` redraws them on every evaluation
+    draw = F.udf(lambda: random.random(), "double").asNondeterministic()
+
+    def frame(lo, hi):
+        return spark.range(lo, hi, 1, 4).select(
+            F.col("id"),
+            (draw() * 1000).alias("x"),
+            F.timestamp_seconds((draw() * 1e9).cast("long")).alias("ts"),
+            F.date_add(
+                F.lit("2024-01-01").cast("date"), (draw() * 365).cast("int")
+            ).alias("d"),
+            (draw() * 1e6).cast("long").cast("string").alias("tag"),
+        )
+
+    t = str(tmp_path / "vobs")
+    versioned_commit(
+        frame(0, 400), t, stats_cols=["x", "ts", "d"], member_cols=["tag"],
+        expect={"x_nonneg": "x >= 0"},
+    )
+    _assert_manifest_describes_bytes(spark, t)
+    versioned_merge(spark, t, frame(200, 600), ["id"])
+    _assert_manifest_describes_bytes(spark, t)
+
+
+def test_versioned_empty_batches(spark, tmp_path):
+    """Degenerate batches: a 0-row commit records all-NULL stats, empty
+    member sets and a 0-row integrity record; a delete that empties its
+    affected dirs drops them from the manifest; a merge with an empty
+    source publishes a version with the same dirs."""
+    import json
+
+    from dwh_with_dask_spark.versioned import (
+        _manifest_path,
+        fsck,
+        read_version,
+        versioned_commit,
+        versioned_delete,
+        versioned_merge,
+    )
+
+    def manifest(t, v):
+        with open(_manifest_path(t, v)) as f:
+            return json.load(f)
+
+    schema = "k long, p string, d date"
+    t = str(tmp_path / "empty_commit")
+    assert versioned_commit(
+        spark.createDataFrame([], schema), t, stats_cols=["k", "d"],
+        member_cols=["p"], expect={"kpos": "k > 0"},
+    ) == 1
+    m = manifest(t, 1)
+    assert m["dirs"] == ["data/v1"]
+    assert m["stats"] == {"data/v1": {"k": [None, None], "d": [None, None]}}
+    assert m["members"] == {"data/v1": {"p": []}}
+    assert m["integrity"]["data/v1"]["rows"] == 0
+    assert m["constraints"] == {"kpos": "k > 0"}
+    assert read_version(spark, t).count() == 0
+
+    t = str(tmp_path / "empty_delete")
+    rows = spark.createDataFrame(
+        [(1, "x", None), (2, "y", None)], schema
+    )
+    versioned_commit(rows, t, stats_cols=["k"], member_cols=["p"])
+    versioned_commit(
+        spark.createDataFrame([(3, "z", None)], schema), t, mode="append",
+        stats_cols=["k"], member_cols=["p"],
+    )
+    assert versioned_delete(spark, t, "k <= 2") == {
+        "version": 3, "dirs_kept": 1, "dirs_rewritten": 1, "rows_deleted": 2,
+    }
+    m = manifest(t, 3)
+    assert m["dirs"] == ["data/v2"]
+    assert set(m["stats"]) == set(m["members"]) == set(m["integrity"]) == {
+        "data/v2"
+    }
+    assert versioned_delete(spark, t, "k >= 0") == {
+        "version": 4, "dirs_kept": 0, "dirs_rewritten": 1, "rows_deleted": 1,
+    }
+    m = manifest(t, 4)
+    assert m["dirs"] == [] and m["integrity"] == {}
+    assert "stats" not in m and "members" not in m
+    assert read_version(spark, t).count() == 0
+    assert fsck(t, deep=True)["ok"]
+
+    t = str(tmp_path / "empty_merge")
+    versioned_commit(
+        rows, t, stats_cols=["k"], member_cols=["p"], expect={"kpos": "k > 0"}
+    )
+    assert versioned_merge(
+        spark, t, spark.createDataFrame([], schema), ["k"]
+    ) == {
+        "version": 2, "dirs_kept": 1, "dirs_rewritten": 0, "dirs_added": 0,
+        "rows_written": 0,
+    }
+    m1, m2 = manifest(t, 1), manifest(t, 2)
+    assert m2["dirs"] == ["data/v1"]
+    for key in ("stats", "members", "integrity", "constraints"):
+        assert m2[key] == m1[key]
+    assert read_version(spark, t).count() == 2
 
 
 def test_schema_evolution_contract(spark, tmp_path):
