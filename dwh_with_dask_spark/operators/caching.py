@@ -78,7 +78,6 @@ class CacheScope:
         self.release()
 
 
-
 def pin(df: DataFrame) -> DataFrame:
     """Materialize ``df`` now and truncate its lineage (an eager
     ``localCheckpoint``). A fixpoint loop that only persists caches the

@@ -1281,11 +1281,12 @@ def connected_components(
     (stars/cliques), so 2-4 rounds in practice; pointer jumping bounds
     pathological chains at O(log diameter) and ``max_iter`` is the hard
     stop. Each round the labels are pinned (``caching.pin``, an eager
-    ``localCheckpoint``) — persist alone is NOT enough for a fixpoint loop: it caches data but
-    leaves the logical plan growing exponentially round over round, which
-    blows up plan compilation long before any executor does real work
-    (cf. large-star/small-star in the public connected-components
-    literature, which uses the same per-round materialization).
+    ``localCheckpoint``) — persist alone is NOT enough for a fixpoint
+    loop: it caches data but leaves the logical plan growing
+    exponentially round over round, which blows up plan compilation long
+    before any executor does real work (cf. large-star/small-star in the
+    public connected-components literature, which uses the same
+    per-round materialization).
 
     ``nodes`` (optional) adds isolated nodes: they come out as their own
     singleton components.
